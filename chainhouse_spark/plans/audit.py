@@ -76,9 +76,10 @@ def _single_partition_suspects(text: str) -> list[str]:
       gather — input is one row per upstream partition, constant-size. A
       global SortAggregate fed unbounded raw rows does NOT qualify
       (tightened per ADVICE r06).
-    - the exchange Input carries ``__gr_pid#N`` as a standalone attribute
-      (exact match, not substring): operators/ranking.py's
-      cumulative-offset window over <= shuffle-partitions rows.
+    - the exchange Input carries ``__gr_pid#N`` or ``__gr_blk#N`` as a
+      standalone attribute (exact match, not substring): operators/
+      ranking.py's cumulative-offset windows, over <= shuffle-partitions
+      rows (pid form) or <= 4 * shuffle-partitions + 1 rows (block form).
     - a descendant is a limit node (TakeOrderedAndProject / *Limit): the
       exchanged input is <= k rows by construction.
     """
@@ -112,7 +113,7 @@ def _single_partition_suspects(text: str) -> list[str]:
             continue
         input_m = re.search(r"^Input \[\d+\]: \[(.*)\]$", block, re.M)
         if input_m and any(
-            re.fullmatch(r"__gr_pid#\d+L?", col.strip())
+            re.fullmatch(r"__gr_(pid|blk)#\d+L?", col.strip())
             for col in input_m.group(1).split(",")
         ):
             continue

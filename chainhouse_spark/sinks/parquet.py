@@ -76,7 +76,12 @@ def write_all(
     next to the previous ones. Slice re-runs then duplicate rows at rest —
     the reference has the same at-least-once behavior and heals it at merge
     time (ReplacingMergeTree); here `read_table_deduped` is the equivalent
-    exact read-side heal, and a compaction rewrite makes it permanent."""
+    exact read-side heal, and a compaction rewrite makes it permanent.
+
+    One Spark job runs per table, so the four tables' shared input is
+    computed four times unless it is materialized once. Tables from
+    `all_tables_from_raw(raw_blocks_from_rpc(...))` are: the first write
+    fetches the slice and the other three read that snapshot."""
     for name, df in tables.items():
         write_table(df, name, base_path, bucket_size, mode=mode)
 

@@ -852,6 +852,10 @@ def test_single_partition_exemptions_are_exact():
     pid = plan("Sort", "Input [1]: [x#1]\nArguments: [x#1 ASC]\n",
                "x#1, __gr_pid#12L")
     assert _single_partition_suspects(pid) == []
+    # ... and so does the block-form __gr_blk attribute (an int column) ...
+    blk = plan("Sort", "Input [1]: [x#1]\nArguments: [x#1 ASC]\n",
+               "x#1, __gr_blk#12")
+    assert _single_partition_suspects(blk) == []
     # ... but a column whose name merely contains the substring does not.
     lookalike = plan("Sort", "Input [1]: [x#1]\nArguments: [x#1 ASC]\n",
                      "x#1, my__gr_pid_copy#12L")

@@ -4,6 +4,9 @@ layout, the ClickHouse DDL emitter, and the CLI surface.
 
 from __future__ import annotations
 
+import hashlib
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -157,6 +160,75 @@ def test_rpc_source_end_to_end(spark):
     assert tables["withdraws"].count() == 3  # odd heights only
     got = {r.number for r in tables["blocks"].select("number").collect()}
     assert got == set(range(1, 7))
+
+
+def test_fetch_heights_does_not_retry_parse_errors():
+    """A malformed payload fails the same way on every re-fetch: it raises
+    after the one block + receipts call pair, with no backoff and retry."""
+    calls = {"n": 0}
+
+    def malformed(method, params):
+        calls["n"] += 1
+        out = fake_transport(method, params)
+        return {**out, "hash": "0xnot-hex"} if method == "eth_getBlockByNumber" else out
+
+    with pytest.raises(ValueError):
+        list(fetch_heights([4], malformed, max_retries=3, backoff_sec=0.0))
+    assert calls["n"] == 2
+
+
+def test_rpc_slice_fetches_each_height_once(spark, tmp_path):
+    """The four table writes of a slice share one fetch: two RPC calls
+    (block + receipts) per height in total, not two per table."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting_factory():
+        def call(method, params):
+            calls.add(1)
+            return fake_transport(method, params)
+
+        return call
+
+    raw = raw_blocks_from_rpc(
+        spark, "unused://", 1, 6, parallelism=3, transport_factory=counting_factory
+    )
+    write_all(all_tables_from_raw(raw), str(tmp_path), bucket_size=2)
+    assert read_table(spark, "blocks", str(tmp_path)).count() == 6
+    assert calls.value == 2 * 6
+
+
+def test_rpc_slice_tables_share_one_snapshot(spark, tmp_path):
+    """Every client sees a different fork (each factory() call salts the
+    block hashes), the way re-fetches near the chain tip can. All four
+    tables of a slice must still come from one response: every child
+    row's blockHash is a hash in the slice's blocks table."""
+
+    def forking_factory():
+        salt = uuid.uuid4().hex
+
+        def call(method, params):
+            out = fake_transport(method, params)
+            if method == "eth_getBlockByNumber":
+                forked = hashlib.sha256(f"{salt}:{params[0]}".encode()).hexdigest()
+                out = {**out, "hash": "0x" + forked}
+            return out
+
+        return call
+
+    raw = raw_blocks_from_rpc(
+        spark, "unused://", 1, 6, parallelism=3, transport_factory=forking_factory
+    )
+    write_all(all_tables_from_raw(raw), str(tmp_path), bucket_size=2)
+
+    def column(name, col):
+        rows = read_table(spark, name, str(tmp_path)).select(col).collect()
+        return {r[0] for r in rows}
+
+    hashes = column("blocks", "hash")
+    assert len(hashes) == 6
+    for name in ("transactions", "events", "withdraws"):
+        got = column(name, "blockHash")
+        assert got and got <= hashes, name
 
 
 def test_parquet_sink_layout(spark, tmp_path):

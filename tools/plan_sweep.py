@@ -30,9 +30,10 @@ CARTESIAN_OK = {
 # task — the plan signature of an unpartitioned window or sort-based global
 # aggregate, the round-5 scale audit's finding class. plans/audit.py
 # classifies the provably-bounded ones (final aggregate gathers, ranking.py
-# __gr_pid offset windows, post-limit-k sorts) as benign from the plan tree
-# itself; everything left is a SUSPECT and must be whitelisted here with
-# the reason, or fixed. The map value is the max allowed suspect count.
+# __gr_pid / __gr_blk offset windows, post-limit-k sorts) as benign from
+# the plan tree itself; everything left is a SUSPECT and must be
+# whitelisted here with the reason, or fixed. The map value is the max
+# allowed suspect count.
 SINGLE_PARTITION_OK: dict[str, int] = {
     # Documented exact-global sort: equi-depth bucket boundaries are a
     # whole-distribution property; the approximate 100 TB path is pinned
