@@ -21,6 +21,7 @@ import argparse
 
 from chainhouse_spark.session import build_spark
 from chainhouse_spark.sinks import clickhouse as ch
+from chainhouse_spark.sinks import write_concurrently
 from chainhouse_spark.sinks.parquet import write_all
 from chainhouse_spark.sources.rpc import raw_blocks_from_rpc
 from chainhouse_spark.transforms import all_tables_from_raw
@@ -231,16 +232,19 @@ def main(argv: list[str] | None = None) -> int:
         elif args.ch_protocol == "rowbinary":
             from chainhouse_spark.sinks.rowbinary import write_rowbinary_http
 
-            for name, df in tables.items():
-                write_rowbinary_http(df, name, args.clickhouse)
+            write_concurrently(
+                tables, lambda df, name: write_rowbinary_http(df, name, args.clickhouse)
+            )
         elif args.ch_protocol == "native":
             from chainhouse_spark.sinks.native_tcp import write_native_tcp
 
-            for name, df in tables.items():
-                write_native_tcp(df, name, args.clickhouse)
+            write_concurrently(
+                tables, lambda df, name: write_native_tcp(df, name, args.clickhouse)
+            )
         else:
-            for name, df in tables.items():
-                ch.write_jdbc(df, name, args.clickhouse)
+            write_concurrently(
+                tables, lambda df, name: ch.write_jdbc(df, name, args.clickhouse)
+            )
         print(f"wrote blocks [{lo}, {hi}]")
         lo = hi + 1
     _stop_if_owned(spark)

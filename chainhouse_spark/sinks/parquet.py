@@ -12,6 +12,11 @@ Replaces the ClickHouse MergeTree side of the reference's contract
 - Partition layout: `block_bucket = blockNumber div bucket_size` — bounded
   partition count at any chain height (10k blocks/bucket ≈ 1.4k partitions
   for all of mainnet), pruning for the dominant block-range predicates.
+- Concurrent writes: `write_all` writes its tables at the same time, so
+  when one table's write fails the others may still land. That is the
+  same partial state a failure of the last table of a sequential flush
+  leaves: re-running the slice writes every table again, and the K8 key
+  dedup (`read_table_deduped`, `compact_table`) absorbs the overlap.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chainhouse_spark.schemas import DEDUP_KEYS
+from chainhouse_spark.sinks import write_concurrently
 
 BLOCK_COL = {
     "blocks": "number",
@@ -68,9 +74,13 @@ def write_all(
     bucket_size: int = 10_000,
     mode: str = "overwrite",
 ) -> None:
-    """The reference flushes 4 tables concurrently (tokio try_join,
-    src/main.rs:293-310); Spark jobs are internally parallel so sequential
-    submission loses nothing at partition granularity.
+    """Write every table, all at once: the reference flushes its four
+    tables concurrently too (`tokio::try_join`, src/main.rs:292-319). A
+    slice fits one block_bucket, so the last stage of each table's write
+    (the sort and the parquet write) is a single task; run one after
+    another, they leave all but one core idle and serialize each job's
+    driver-side planning and commit. See `sinks.write_concurrently` for the
+    threading and the failure contract.
 
     mode="append" is the batched-slice contract (K4/K7): each slice lands
     next to the previous ones. Slice re-runs then duplicate rows at rest —
@@ -78,12 +88,14 @@ def write_all(
     time (ReplacingMergeTree); here `read_table_deduped` is the equivalent
     exact read-side heal, and a compaction rewrite makes it permanent.
 
-    One Spark job runs per table, so the four tables' shared input is
-    computed four times unless it is materialized once. Tables from
-    `all_tables_from_raw(raw_blocks_from_rpc(...))` are: the first write
-    fetches the slice and the other three read that snapshot."""
-    for name, df in tables.items():
-        write_table(df, name, base_path, bucket_size, mode=mode)
+    The tables' shared input should be materialized before this is called,
+    or each concurrent write computes it again. Tables from
+    `all_tables_from_raw(raw_blocks_from_rpc(...))` are: the slice was
+    fetched once, eagerly, and every write reads that snapshot."""
+    write_concurrently(
+        tables,
+        lambda df, name: write_table(df, name, base_path, bucket_size, mode=mode),
+    )
 
 
 def read_table_deduped(spark: SparkSession, name: str, base_path: str) -> DataFrame:

@@ -41,8 +41,9 @@ sources.fixtures — tests drive the full reader paths with zero network.
 Unlike sources.rpc.raw_blocks_from_rpc, a batch `load()` is not
 materialized: every action on the frame re-runs read() and re-fetches
 every height. A caller that writes the four tables from one load should
-`localCheckpoint(eager=False)` the loaded frame first, so one fetch feeds
-all four writes and they agree on one snapshot of the chain.
+`localCheckpoint(eager=True)` the loaded frame before `write_all`, so one
+fetch, finished before the concurrent writes start, feeds all four and
+they agree on one snapshot of the chain.
 """
 
 from __future__ import annotations

@@ -13,15 +13,19 @@ are idempotent and the K8 dedup heals overlap.
 
 One fetch per height: like the reference, which fetches a block and its
 receipts once and flattens that one response into all four row buffers
-(src/main.rs:173-174), the returned frame is a lazy localCheckpoint. The
-first action on it (the first table write of a slice) fetches, parses and
-materializes every height once; every later action on the same frame (the
-other three table writes) reads those rows. So a slice costs exactly two
-RPC calls per height, and its four tables come from the same response
-even when the node flaps between forks near the chain tip. Trade-off: the
-checkpoint has no lineage, so a lost executor fails the slice loudly
-instead of re-fetching; re-running the slice heals it, and the K8 key
-dedup absorbs the overlap.
+(src/main.rs:173-174), the returned frame is an eager localCheckpoint.
+`raw_blocks_from_rpc` itself runs the fetch: it fetches, parses and
+materializes every height once, before any table write starts, and every
+action on the frame (the four table writes) reads those rows. So a slice
+costs exactly two RPC calls per height, and its four tables come from the
+same response even when the node flaps between forks near the chain tip.
+The checkpoint is eager, not lazy, because the four writes run
+concurrently (`sinks.write_concurrently`): with a lazy checkpoint, jobs
+running at once on several executors could each compute the same
+not-yet-materialized partition, fetching its heights twice and possibly
+from two forks. Trade-off: the checkpoint has no lineage, so a lost
+executor fails the slice loudly instead of re-fetching; re-running the
+slice heals it, and the K8 key dedup absorbs the overlap.
 
 The transport is pluggable: tests inject a fake; production dispatches on
 the endpoint scheme — stdlib urllib HTTP JSON-RPC for http(s)://, the
@@ -218,9 +222,9 @@ def raw_blocks_from_rpc(
 ) -> DataFrame:
     """The distributed scan: inclusive [from_block, to_block] fetched by
     `parallelism` concurrent partition clients (transport chosen from the
-    endpoint scheme: http(s) or ws(s)). The frame is computed once, on its
-    first action, and every later action reads that snapshot (see the
-    module docstring for the lineage trade-off)."""
+    endpoint scheme: http(s) or ws(s)). The frame is fetched and
+    materialized here, once, and every action on it reads that snapshot
+    (see the module docstring for why eager, and the lineage trade-off)."""
     factory = transport_factory or (lambda: transport_for(endpoint))
 
     def fetch_partition(rows: Iterator) -> Iterator:
@@ -233,4 +237,4 @@ def raw_blocks_from_rpc(
     rng = spark.range(from_block, to_block + 1).repartition(parallelism)
     return spark.createDataFrame(
         rng.rdd.mapPartitions(fetch_partition), RAW_BLOCK
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)

@@ -166,11 +166,12 @@ def all_tables_from_raw(raw: DataFrame, dedup: bool = True) -> dict[str, DataFra
     """The full pipeline output — four DataFrames over `raw`.
 
     They come from one raw scan only if `raw` is computed once: each
-    table's write is its own Spark job, and each job re-runs an uncached
-    `raw`. `sources.rpc.raw_blocks_from_rpc` returns a lazy
-    localCheckpoint, so there the first write fetches the slice and the
-    other three read it; a frame from `spark.read.format("ethereum")` needs
-    the same `localCheckpoint(eager=False)` from its caller."""
+    table's write is its own Spark job, the four jobs run concurrently
+    (`sinks.parquet.write_all`), and each re-runs an uncached `raw`.
+    `sources.rpc.raw_blocks_from_rpc` returns an eager localCheckpoint, so
+    the slice is fetched before the writes start and all four read it; a
+    frame from `spark.read.format("ethereum")` needs the same
+    `localCheckpoint(eager=True)` from its caller."""
     return {
         "blocks": blocks_from_raw(raw, dedup),
         "transactions": transactions_from_raw(raw, dedup),

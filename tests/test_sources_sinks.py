@@ -5,7 +5,12 @@ layout, the ClickHouse DDL emitter, and the CLI surface.
 from __future__ import annotations
 
 import hashlib
+import json
+import threading
+import urllib.parse
 import uuid
+from contextlib import contextmanager
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 from pyspark.sql import functions as F
@@ -192,6 +197,9 @@ def test_rpc_slice_fetches_each_height_once(spark, tmp_path):
     raw = raw_blocks_from_rpc(
         spark, "unused://", 1, 6, parallelism=3, transport_factory=counting_factory
     )
+    # Fetched eagerly: the whole slice is in before any write starts, so
+    # the concurrent writes cannot race to fetch the same partition.
+    assert calls.value == 2 * 6
     write_all(all_tables_from_raw(raw), str(tmp_path), bucket_size=2)
     assert read_table(spark, "blocks", str(tmp_path)).count() == 6
     assert calls.value == 2 * 6
@@ -229,6 +237,66 @@ def test_rpc_slice_tables_share_one_snapshot(spark, tmp_path):
     for name in ("transactions", "events", "withdraws"):
         got = column(name, "blockHash")
         assert got and got <= hashes, name
+
+
+def test_write_concurrently_runs_every_write_at_once(spark):
+    """All writes are in flight together (a barrier only the four of them
+    can pass), and each thread keeps the caller's job group."""
+    from chainhouse_spark.sinks import write_concurrently
+    from perfbench.trace import SparkCounters
+
+    tables = all_tables_from_raw(raw_blocks_df(spark, 2, seed=42))
+    barrier = threading.Barrier(len(tables), timeout=30)
+    groups = {}
+
+    def write(df, name):
+        barrier.wait()
+        groups[name] = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+
+    with SparkCounters(spark).group("concurrent-writes"):
+        write_concurrently(tables, write)
+    assert groups == {name: "concurrent-writes" for name in tables}
+
+
+def test_write_all_attributes_written_files_per_execution(spark, tmp_path):
+    """Each concurrent write keeps its own SQL execution id: the written-file
+    metrics of the group's SQL executions, as the benchmark's counters read
+    them, add up to the files on disk. (A thread-shared copy of the local
+    properties lets one write's execution id overwrite another's, and the
+    files land on the wrong execution.)"""
+    from perfbench.trace import SparkCounters
+
+    counters = SparkCounters(spark)
+    group = f"write-all-{uuid.uuid4().hex}"
+    with counters.group(group):
+        write_all(
+            all_tables_from_raw(raw_blocks_df(spark, 6, seed=42)),
+            str(tmp_path),
+            bucket_size=2,
+        )
+    on_disk = len(list(tmp_path.rglob("*.parquet")))
+    assert on_disk >= 10
+    assert counters.read(group)["files_written"] == on_disk
+
+
+def test_write_all_raises_after_every_other_write_lands(spark, tmp_path):
+    """One table fails at run time: write_all raises that error, but only
+    once the other writes are done — they land, and no job is left
+    running."""
+    tables = all_tables_from_raw(raw_blocks_df(spark, 6, seed=42))
+    tables["transactions"] = tables["transactions"].withColumn(
+        "nonce",
+        F.when(F.col("blockNumber") >= 0, F.raise_error(F.lit("boom-transactions")))
+        .otherwise(F.col("nonce")),
+    )
+    with pytest.raises(Exception, match="boom-transactions"):
+        write_all(tables, str(tmp_path), bucket_size=2)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getActiveJobsIds()
+    for name in ("blocks", "events", "withdraws"):
+        assert read_table(spark, name, str(tmp_path)).count() == tables[name].count()
+    assert not (tmp_path / "transactions" / "_SUCCESS").exists()
 
 
 def test_parquet_sink_layout(spark, tmp_path):
@@ -622,18 +690,10 @@ def test_rowbinary_roundtrip_all_four_tables(spark):
     assert checked > 1000
 
 
-def test_rowbinary_http_insert_path(spark):
-    """Drive write_rowbinary_http against a fake ClickHouse HTTP endpoint:
-    the INSERT query must name the table + every column + FORMAT RowBinary,
-    and the POsted bytes must decode to the dataframe's rows."""
-    import threading
-    import urllib.parse
-    from http.server import BaseHTTPRequestHandler, HTTPServer
-
-    from chainhouse_spark.queries.ethereum import _tables
-    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
-    from chainhouse_spark.sinks.rowbinary import write_rowbinary_http
-
+@contextmanager
+def _fake_clickhouse():
+    """A ClickHouse HTTP endpoint that records each POST as (decoded query
+    string, body)."""
     received = []
 
     class Handler(BaseHTTPRequestHandler):
@@ -647,13 +707,56 @@ def test_rowbinary_http_insert_path(spark):
         def log_message(self, *a):
             pass
 
-    srv = HTTPServer(("127.0.0.1", 0), Handler)
+    with _serving(Handler) as port:
+        yield f"127.0.0.1:{port}", received
+
+
+@contextmanager
+def _fake_rpc_node():
+    """A JSON-RPC node answering from `fake_transport`."""
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):
+            req = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
+            body = json.dumps({
+                "jsonrpc": "2.0", "id": req["id"],
+                "result": fake_transport(req["method"], req["params"]),
+            }).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    with _serving(Handler) as port:
+        yield f"http://127.0.0.1:{port}"
+
+
+@contextmanager
+def _serving(handler):
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
+        yield srv.server_port
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_rowbinary_http_insert_path(spark):
+    """Drive write_rowbinary_http against a fake ClickHouse HTTP endpoint:
+    the INSERT query must name the table + every column + FORMAT RowBinary,
+    and the POsted bytes must decode to the dataframe's rows."""
+    from chainhouse_spark.queries.ethereum import _tables
+    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
+    from chainhouse_spark.sinks.rowbinary import write_rowbinary_http
+
+    with _fake_clickhouse() as (endpoint, received):
         blocks = _tables(spark)["blocks"]
-        write_rowbinary_http(
-            blocks, "blocks", f"127.0.0.1:{srv.server_port}", batch_size=3
-        )
+        write_rowbinary_http(blocks, "blocks", endpoint, batch_size=3)
         assert received, "no INSERT arrived"
         q0 = received[0][0]
         assert q0.startswith("query=INSERT INTO ethereum.blocks (`hash`, `number`")
@@ -663,8 +766,31 @@ def test_rowbinary_http_insert_path(spark):
         assert len(back) == blocks.count()
         nums = sorted(r["number"] for r in back)
         assert nums == sorted(r.number for r in blocks.collect())
-    finally:
-        srv.shutdown()
+
+
+def test_cli_rpc_to_clickhouse_rowbinary(spark, capsys):
+    """The CLI's RPC -> ClickHouse path: two 3-block slices fetched from a
+    JSON-RPC node, all four tables INSERTed over RowBinary HTTP."""
+    from chainhouse_spark.cli import main
+    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
+
+    with _fake_rpc_node() as node, _fake_clickhouse() as (ch_endpoint, received):
+        rc = main([
+            "--ethereum", node, "--clickhouse", ch_endpoint,
+            "--ch-protocol", "rowbinary",
+            "--from", "1", "--to", "6", "--batch", "3", "--parallelism", "3",
+        ])
+    assert rc == 0
+    assert "wrote blocks [4, 6]" in capsys.readouterr().out
+    bodies = {}
+    for query, body in received:
+        table = query.split("INSERT INTO ethereum.", 1)[1].split(" ", 1)[0]
+        bodies[table] = bodies.get(table, b"") + body
+    counts = {
+        name: len(_rb_decode(body, TABLES[name], DEDUP_KEYS[name]))
+        for name, body in bodies.items()
+    }
+    assert counts == {"blocks": 6, "transactions": 6, "events": 6, "withdraws": 3}
 
 
 def test_cli_warehouse_sql(spark, tmp_path, capsys):
