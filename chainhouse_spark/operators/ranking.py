@@ -54,6 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 _PID = "__gr_pid"
 _OFF = "__gr_off"
@@ -193,6 +194,28 @@ def global_running_sums(
     steps taking the last running count per value) may order by the key
     alone IF every summed column is tie-invariant under that collapse.
 
+    Exactness, by summed column type (the same rule as the query
+    modules' DOUBLE aggregates, `queries/registry.py`):
+
+    - integral and DECIMAL columns are summed exactly in their own type,
+      as Spark's SUM types them;
+    - FLOAT/DOUBLE columns are summed through a hidden DECIMAL(38,18)
+      twin (per-part totals, offsets and the local window alike) and the
+      exact decimal prefix is rounded ONCE to DOUBLE, the type SUM gives
+      them, so the output schema is unchanged. Each summand enters as
+      Spark's cast to DECIMAL(38,18) gives it (it reads the double's
+      decimal string form), so the resolution is 1e-18 and magnitudes
+      near or below that lose relative precision against a double. Every
+      prefix must stay below 5e18 in magnitude: each partial sum formed
+      is a difference of two prefixes and must fit DECIMAL(37,18), and
+      beyond that Spark's ANSI mode (the default) raises an overflow;
+    - a NaN or ±Inf summand (and, with ANSI off, one outside
+      DECIMAL(38,18)) raises an error naming the column; it is never
+      skipped or turned into a NULL result.
+
+    Callers that need another scale cast to DECIMAL themselves, as
+    `surv_kaplan_meier` does for its `lterm` column.
+
     Two forms (round-13, guide §2.4):
 
     `block_key=None` — the round-5 two-phase shape: range partition on
@@ -221,8 +244,10 @@ def global_running_sums(
     window are the only shuffles. Plan diff vs the None form: full-data
     exchanges 2 -> 1, full-data checkpoint write removed, sampler job
     replaced by the quantile action. Results are boundary-independent
-    (offsets correct for whatever blocks the quantiles draw), exactly as
-    ranks are in `global_row_number`. Skew caveat: all ties of one key
+    (offsets correct for whatever blocks the quantiles draw, and every
+    sum is exact — float columns included, see Exactness above), exactly
+    as ranks are in `global_row_number`: both forms, at any partition
+    count, give bit-identical outputs. Skew caveat: all ties of one key
     value land in one block, so a tie-heavy leading key (e.g. Zipf
     counts) needs a tie-broken unique key instead — vocab_coverage_curve
     passes its rank column for exactly that reason.
@@ -237,30 +262,7 @@ def global_running_sums(
             df, order_by, sum_cols, num_partitions, materialize_input, block_key
         )
     ranged = _ranged_with_pid(df, order_by, num_partitions, materialize_input)
-    totals = ranged.groupBy(_PID).agg(
-        *[F.sum(src).alias(f"__t_{src}") for src in sum_cols]
-    )
-    w_off = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        _PID,
-        *[
-            F.coalesce(F.sum(f"__t_{src}").over(w_off), F.lit(0)).alias(
-                f"__o_{src}"
-            )
-            for src in sum_cols
-        ],
-    )
-    local = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranged.join(F.broadcast(offsets), _PID)
-    for src, dst in sum_cols.items():
-        out = out.withColumn(
-            dst, F.sum(src).over(local) + F.col(f"__o_{src}")
-        )
-    return out.drop(_PID, *[f"__o_{src}" for src in sum_cols])
+    return _offset_running_sums(ranged, _PID, order_by, sum_cols)
 
 
 def _block_running_sums(
@@ -297,13 +299,71 @@ def _block_running_sums(
         blk = F.size(F.filter(barr, lambda b: b < key))
     else:
         blk = F.lit(0)
-    blocked = df.withColumn(_BLK, blk)
-    totals = blocked.groupBy(_BLK).agg(
-        *[F.sum(src).alias(f"__t_{src}") for src in sum_cols]
+    return _offset_running_sums(
+        df.withColumn(_BLK, blk), _BLK, order_by, sum_cols
     )
-    w_off = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
+
+
+# Float summands are accumulated in this decimal; the final offset + local
+# addition narrows both sides to DECIMAL(37,18) so that Spark types the
+# sum DECIMAL(38,18) — two DECIMAL(38,18) operands would be typed
+# DECIMAL(38,17) and rounded before the one cast back to DOUBLE.
+_DEC = "decimal(38,18)"
+_DEC_ADD = "decimal(37,18)"
+
+
+def _decimal_twins(
+    df: DataFrame, sum_cols: dict[str, str]
+) -> tuple[DataFrame, dict[str, str]]:
+    """Give every FLOAT/DOUBLE summed column a hidden DECIMAL(38,18) twin.
+
+    Returns the widened frame and src -> the column actually summed (the
+    twin, or `src` itself for integral and DECIMAL columns, which are
+    left untouched). A non-null summand whose decimal is NULL (NaN, ±Inf,
+    or out of range with ANSI off) raises, naming the column — `sum`
+    would otherwise skip it without a word."""
+    summed = {}
+    for src in sum_cols:
+        summed[src] = src
+        if not isinstance(df.schema[src].dataType, (FloatType, DoubleType)):
+            continue
+        summed[src] = twin = f"__gr_d_{src}"
+        dec = F.col(src).cast(_DEC)
+        df = df.withColumn(
+            twin,
+            F.when(
+                F.col(src).isNotNull() & dec.isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            f"global_running_sums: column {src!r} holds a "
+                            f"value with no {_DEC.upper()} equivalent: "
+                        ),
+                        F.col(src).cast("string"),
+                    )
+                ),
+            ).otherwise(dec),
+        )
+    return df, summed
+
+
+def _offset_running_sums(
+    tagged: DataFrame,
+    part: str,
+    order_by: list[Column],
+    sum_cols: dict[str, str],
+) -> DataFrame:
+    """Running sums of rows tagged with contiguous parts (`part` ascending
+    follows the global order): tiny per-part totals -> cumulative offsets
+    (broadcast), plus a local running sum from a window partitioned by
+    `part`. Drops `part` and every helper column."""
+    tagged, summed = _decimal_twins(tagged, sum_cols)
+    totals = tagged.groupBy(part).agg(
+        *[F.sum(col).alias(f"__t_{src}") for src, col in summed.items()]
+    )
+    w_off = Window.orderBy(part).rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
-        _BLK,
+        part,
         *[
             F.coalesce(F.sum(f"__t_{src}").over(w_off), F.lit(0)).alias(
                 f"__o_{src}"
@@ -312,13 +372,17 @@ def _block_running_sums(
         ],
     )
     local = (
-        Window.partitionBy(_BLK)
+        Window.partitionBy(part)
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = blocked.join(F.broadcast(offsets), _BLK)
+    out = tagged.join(F.broadcast(offsets), part)
     for src, dst in sum_cols.items():
-        out = out.withColumn(
-            dst, F.sum(src).over(local) + F.col(f"__o_{src}")
-        )
-    return out.drop(_BLK, *[f"__o_{src}" for src in sum_cols])
+        run, off = F.sum(summed[src]).over(local), F.col(f"__o_{src}")
+        if summed[src] == src:
+            out = out.withColumn(dst, run + off)
+        else:
+            exact = run.cast(_DEC_ADD) + off.cast(_DEC_ADD)
+            out = out.withColumn(dst, exact.cast("double"))
+    twins = [col for src, col in summed.items() if col != src]
+    return out.drop(part, *twins, *[f"__o_{src}" for src in sum_cols])

@@ -253,3 +253,54 @@ def test_star_loop_converged_input_single_round(spark):
     )
     got = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
     assert got == {5: 1, 3: 1, 9: 1, 1: 1}
+
+
+def _running_sum_forms(df, key="k"):
+    """Both global_running_sums forms at several partition counts."""
+    from chainhouse_spark.operators.ranking import global_running_sums
+
+    for p in (2, 4, 7, 16):
+        yield f"range/P={p}", global_running_sums(
+            df, [F.asc(key)], {"x": "cx"}, num_partitions=p
+        )
+        yield f"block/P={p}", global_running_sums(
+            df, [F.asc(key)], {"x": "cx"}, num_partitions=p, block_key=key
+        )
+
+
+def test_double_running_sums_are_boundary_independent(spark):
+    """DOUBLE running sums are exact (summed in DECIMAL(38,18), rounded
+    once to DOUBLE), so every form and partition count gives the same
+    bits: the property rows0 above checks at one partition count only.
+    x = i/3 does not add exactly in binary, so IEEE summation in a
+    boundary-dependent order would differ in the last bit."""
+    from decimal import Decimal, localcontext
+
+    n = 1999
+    df = spark.createDataFrame(
+        [(float(i), i / 3.0) for i in range(1, n + 1)], "k double, x double"
+    )
+    # Oracle: Spark's own decimal image of each summand, summed exactly
+    # in Python and rounded once (float(Decimal) rounds correctly).
+    twins = df.select("k", F.col("x").cast("decimal(38,18)").alias("d"))
+    want, acc = {}, Decimal(0)
+    with localcontext(prec=60):  # exact: 38 digits never round
+        for r in sorted(twins.collect()):
+            acc += r.d
+            want[r.k] = float(acc)
+    schema = "struct<k:double,x:double,cx:double>"
+    for form, out in _running_sum_forms(df):
+        assert dict(out.select("k", "cx").collect()) == want, form
+        assert out.schema.simpleString() == schema, form
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_running_sums_raise_on_non_finite_summand(spark, bad):
+    """A NaN or ±Inf summand has no decimal image; it must fail loudly,
+    naming the column, in both forms — never be skipped by SUM and never
+    come back as a NULL running sum."""
+    rows = [(float(i), float(i) / 3.0) for i in range(1, 40)] + [(50.0, bad)]
+    df = spark.createDataFrame(rows, "k double, x double")
+    for form, out in _running_sum_forms(df):
+        with pytest.raises(Exception, match="column 'x'"):
+            out.collect()
