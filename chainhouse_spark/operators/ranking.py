@@ -356,7 +356,13 @@ def _offset_running_sums(
     """Running sums of rows tagged with contiguous parts (`part` ascending
     follows the global order): tiny per-part totals -> cumulative offsets
     (broadcast), plus a local running sum from a window partitioned by
-    `part`. Drops `part` and every helper column."""
+    `part`. Drops `part` and every helper column.
+
+    NULL summands follow a global window's SUM: the offset is NULL while
+    every earlier summand is NULL, the local sum is NULL while every
+    summand of the part up to the row is NULL, and the running sum is
+    `coalesce(run + off, run, off)`, so a NULL on either side gives the
+    other (the preceding prefix, for a part that opens with NULLs)."""
     tagged, summed = _decimal_twins(tagged, sum_cols)
     totals = tagged.groupBy(part).agg(
         *[F.sum(col).alias(f"__t_{src}") for src, col in summed.items()]
@@ -365,9 +371,7 @@ def _offset_running_sums(
     offsets = totals.select(
         part,
         *[
-            F.coalesce(F.sum(f"__t_{src}").over(w_off), F.lit(0)).alias(
-                f"__o_{src}"
-            )
+            F.sum(f"__t_{src}").over(w_off).alias(f"__o_{src}")
             for src in sum_cols
         ],
     )
@@ -380,9 +384,11 @@ def _offset_running_sums(
     for src, dst in sum_cols.items():
         run, off = F.sum(summed[src]).over(local), F.col(f"__o_{src}")
         if summed[src] == src:
-            out = out.withColumn(dst, run + off)
+            out = out.withColumn(dst, F.coalesce(run + off, run, off))
         else:
             exact = run.cast(_DEC_ADD) + off.cast(_DEC_ADD)
-            out = out.withColumn(dst, exact.cast("double"))
+            out = out.withColumn(
+                dst, F.coalesce(exact, run, off).cast("double")
+            )
     twins = [col for src, col in summed.items() if col != src]
     return out.drop(part, *twins, *[f"__o_{src}" for src in sum_cols])

@@ -314,80 +314,85 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-long sketches, with exact counts and accuracy bools alongside.
     Deterministic md5-derived hashes make the estimates themselves
     oracle-replayable — the whole point of choosing KMV over engine-opaque
-    sketch registers."""
+    sketch registers.
+
+    Plan: every branch reads one per-hash and one per-type aggregate.
+    One groupBy(h) keeps each hash's sorted, distinct event types; those
+    explode back into the distinct (event_type, h) rows, which are ranked
+    by h within each type and reduced by one groupBy(event_type) on the
+    window's own partitioning to n_h, theta and the k-1 sketch as an
+    array. Pairs are a broadcast nested-loop join of those <= |types|
+    rows, and the sketch union/intersection counts are array functions on
+    each pair row, so no branch re-plans or self-joins the distinct
+    relation. The exact intersections explode each hash's i<j type pairs
+    into one more groupBy: 6 shuffle exchanges in the plan. NULL event types
+    never form a pair, and a NULL hash ranks first (ASC NULLS FIRST),
+    counts in n_h, but is never in a sketch or an intersection."""
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
-    uh = ev.select(
-        "event_type",
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)"
-            " AS BIGINT)"
-        ).alias("h"),
-    ).distinct()
+    types_by_h = (
+        ev.select(
+            "event_type",
+            F.expr(
+                "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)"
+                " AS BIGINT)"
+            ).alias("h"),
+        )
+        .groupBy("h")
+        .agg(F.array_sort(F.collect_set("event_type")).alias("types"))
+    )
+    uh = types_by_h.select(F.explode("types").alias("event_type"), "h")
     w = Window.partitionBy("event_type").orderBy("h")
     ranked = uh.withColumn("r", F.row_number().over(w))
     stats = ranked.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_h"),
+        F.max("r").cast("bigint").alias("n_h"),
         F.coalesce(
             F.max(F.when(F.col("r") == _KMV_K, F.col("h"))), F.lit(_POW32)
         ).alias("theta"),
+        # collect_list skips NULLs: rows past k-1 and a NULL hash.
+        F.collect_list(F.when(F.col("r") <= _KMV_K - 1, F.col("h"))).alias(
+            "sk"
+        ),
     )
-    sk = ranked.filter(F.col("r") <= _KMV_K - 1).select("event_type", "h")
 
     a, b = stats.alias("a"), stats.alias("b")
-    pairs = (
-        a.join(b, F.col("a.event_type") < F.col("b.event_type"))
-        .select(
-            F.col("a.event_type").alias("event_a"),
-            F.col("b.event_type").alias("event_b"),
-            F.least("a.theta", "b.theta").alias("tm"),
-            F.col("a.n_h").alias("n_a"),
-            F.col("b.n_h").alias("n_b"),
-        )
+    tm = F.least("a.theta", "b.theta")
+
+    def below_tm(arr):
+        return F.size(F.filter(arr, lambda x: x < tm))
+
+    pairs = a.join(b, F.col("a.event_type") < F.col("b.event_type")).select(
+        F.col("a.event_type").alias("event_a"),
+        F.col("b.event_type").alias("event_b"),
+        tm.alias("tm"),
+        F.col("a.n_h").alias("n_a"),
+        F.col("b.n_h").alias("n_b"),
+        below_tm(F.array_union("a.sk", "b.sk")).alias("n_u"),
+        below_tm(F.array_intersect("a.sk", "b.sk")).alias("n_c"),
     )
-    uni = (
-        pairs.join(
-            sk,
-            sk["event_type"].isin(F.col("event_a"), F.col("event_b"))
-            & (sk["h"] < F.col("tm")),
-        )
-        .groupBy("event_a", "event_b")
-        .agg(F.countDistinct("h").alias("n_u"))
+    # Each hash's i<j type pairs; `types` is sorted, so event_a < event_b.
+    # A NULL hash explodes to no pairs. A filter on h would be pushed below
+    # groupBy(h) into the scan, so this branch would no longer share that
+    # aggregate's exchange with the sketch branch, and md5 would run twice.
+    type_pairs = F.expr(
+        "flatten(transform(types, (ta, i) -> transform("
+        "slice(types, i + 2, size(types)),"
+        " tb -> named_struct('event_a', ta, 'event_b', tb))))"
     )
-    sa, sb = sk.alias("sa"), sk.alias("sb")
-    com = (
-        pairs.join(sa, F.col("sa.event_type") == F.col("event_a"))
-        .join(
-            sb,
-            (F.col("sb.event_type") == F.col("event_b"))
-            & (F.col("sb.h") == F.col("sa.h")),
-        )
-        .filter(F.col("sa.h") < F.col("tm"))
-        .groupBy("event_a", "event_b")
-        .agg(F.count(F.lit(1)).alias("n_c"))
-    )
-    ua, ub = uh.alias("ua"), uh.alias("ub")
     ex = (
-        ua.join(
-            ub,
-            (F.col("ua.h") == F.col("ub.h"))
-            & (F.col("ua.event_type") < F.col("ub.event_type")),
+        types_by_h.select(
+            F.explode(F.when(F.col("h").isNotNull(), type_pairs)).alias("p")
         )
-        .groupBy(
-            F.col("ua.event_type").alias("event_a"),
-            F.col("ub.event_type").alias("event_b"),
-        )
+        .groupBy("p.event_a", "p.event_b")
         .agg(F.count(F.lit(1)).alias("exact_inter"))
     )
-    est_u = F.coalesce("n_u", F.lit(0)) * F.lit(float(_POW32)) / F.col("tm")
-    est_i = F.coalesce("n_c", F.lit(0)) * F.lit(float(_POW32)) / F.col("tm")
+    est_u = F.col("n_u") * F.lit(float(_POW32)) / F.col("tm")
+    est_i = F.col("n_c") * F.lit(float(_POW32)) / F.col("tm")
     ex_u = F.col("n_a") + F.col("n_b") - F.coalesce("exact_inter", F.lit(0))
     ex_i = F.coalesce("exact_inter", F.lit(0))
     return (
-        pairs.join(uni, ["event_a", "event_b"], "left")
-        .join(com, ["event_a", "event_b"], "left")
-        .join(ex, ["event_a", "event_b"], "left")
+        pairs.join(ex, ["event_a", "event_b"], "left")
         .select(
             "event_a",
             "event_b",

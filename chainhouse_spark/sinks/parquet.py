@@ -5,10 +5,17 @@ Replaces the ClickHouse MergeTree side of the reference's contract
 
 - K8 dedup: exact `dropDuplicates` on the ReplacingMergeTree keys happens
   in transforms; writes here are idempotent per block-range slice.
-- K9 sort key: `sortWithinPartitions` on the same keys reproduces the
-  ORDER BY clustering — parquet row-group min/max stats then give scan
-  pruning on key-prefix predicates, the same effect as ClickHouse's sparse
-  primary index (reference src/main.rs:88,123,140,157).
+- K9 sort key: the writers ask for `sortWithinPartitions(*keys)` to
+  reproduce the ORDER BY clustering (reference src/main.rs:88,123,140,157),
+  but the files they write are NOT key-sorted. Spark's planned write adds
+  its own sort on the partition column `block_bucket`, and that sort most
+  likely replaces the user sort below it. A `write_table` over one bucket
+  and over three buckets, and a targeted `compact_table`, all wrote files
+  whose key column was unsorted. So row-group min/max stats on the keys
+  do not prune the way ClickHouse's sparse primary index does; pruning
+  comes from the `block_bucket` partitions alone. Sorting by
+  `("block_bucket", *keys)` does give sorted files, but made block-range
+  and join reads slower; the sort order is an open ROADMAP item.
 - Partition layout: `block_bucket = blockNumber div bucket_size` — bounded
   partition count at any chain height (10k blocks/bucket ≈ 1.4k partitions
   for all of mainnet), pruning for the dominant block-range predicates.
@@ -116,9 +123,10 @@ def compact_table(
     buckets: list[int] | None = None,
 ) -> None:
     """The ReplacingMergeTree background-merge analogue, made explicit:
-    rewrite the table with exact key dedup applied, restoring the K9 sort
-    within each partition. After compaction, plain `read_table` (no
-    read-side dedup) is exact again.
+    rewrite the table with exact key dedup applied (and the same K9 sort
+    request as `write_table`, which does not sort the files; see the module
+    docstring). After compaction, plain `read_table` (no read-side dedup)
+    is exact again.
 
     Full-table mode (buckets=None) runs as overwrite-into-temp + swap so a
     crash never leaves a half-merged table.

@@ -474,6 +474,20 @@ def test_audience_matrix_single_user_shuffle(spark):
     assert f.shuffle_exchanges <= 5
 
 
+def test_theta_set_ops_one_sketch_aggregate(spark):
+    # Every set-op branch reads one per-type sketch aggregate. The plan
+    # lists 6 exchanges: groupBy(h) under each of the three branches
+    # (identical subtrees), the rank window's under both sides of the pair
+    # join (groupBy(event_type) reuses its partitioning) and the
+    # exact-intersection groupBy. Pairs come from a broadcast nested loop
+    # over <= |types| rows, never a cartesian product of row-sized inputs.
+    f = plan_facts(q(spark, "sketch_theta_set_ops"))
+    assert f.shuffle_exchanges <= 6
+    assert f.cartesian_products == 0
+    assert f.python_evals == 0
+    assert f.single_partition_suspects == []
+
+
 def test_simhash_one_generate_two_exchanges(spark):
     # conv() decodes the sketch's hex digits once per token; the 32 bit
     # votes are conditional sums in ONE groupBy(doc_id). Pin: exactly one

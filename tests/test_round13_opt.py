@@ -304,3 +304,20 @@ def test_running_sums_raise_on_non_finite_summand(spark, bad):
     for form, out in _running_sum_forms(df):
         with pytest.raises(Exception, match="column 'x'"):
             out.collect()
+
+
+@pytest.mark.parametrize("typ", ["long", "double"])
+def test_running_sums_carry_prefix_over_null_summands(spark, typ):
+    """A row whose part has only NULL summands up to it gets the preceding
+    prefix, as a global window's SUM gives it, in both forms at every
+    partition count; a prefix of NULLs alone stays NULL. The block form at
+    P=7 puts the NULL at k=50 alone in its block, so its local sum is
+    NULL and the offset alone carries the prefix."""
+    num = float if typ == "double" else int
+    rows = [(0.0, None)] + [(float(i), num(i)) for i in range(1, 40)]
+    rows.append((50.0, None))
+    df = spark.createDataFrame(rows, f"k double, x {typ}")
+    want = {0.0: None, 50.0: 780}
+    want.update({float(i): i * (i + 1) // 2 for i in range(1, 40)})
+    for form, out in _running_sum_forms(df):
+        assert dict(out.select("k", "cx").collect()) == want, form
