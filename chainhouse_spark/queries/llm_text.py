@@ -1195,12 +1195,15 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence count, inclusive cumulative count, and coverage share under
     the reproducible (count DESC, token ASC) total order.
 
-    Plan: one token-count shuffle, then the exact distributed prefix sum
-    (operators/ranking.py::global_running_sums — range partition + tiny
-    per-partition offsets; NO unpartitioned data-sized window) over the
-    ordered counts, and the 1000-row head taken by rank filter. Totals
-    come from one extra 1-row aggregate broadcast back. At 100 TB the
-    curve costs the token count plus a vocab-sized ranking pass."""
+    Plan: one token-count shuffle, the distributed exact row number
+    (operators/ranking.py::global_row_number — range partition + tiny
+    per-partition offsets) under that order, then the exact distributed
+    prefix sum keyed by the row number
+    (operators/ranking.py::global_running_sums — quantile blocks + tiny
+    per-block offsets; NO unpartitioned data-sized window anywhere), and
+    the 1000-row head taken by rank filter. Totals come from one extra
+    1-row aggregate broadcast back. At 100 TB the curve costs the token
+    count plus two vocab-sized ranking passes."""
     from chainhouse_spark.operators.ranking import (
         global_row_number,
         global_running_sums,
@@ -1215,12 +1218,10 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     order = [F.desc("c"), F.asc("token")]
     ranked = global_row_number(cnt, order, out_col="vocab_size")
-    # Prefix-sum over the RANK (same total order as `order`, but unique
-    # and ascending) so the block-quantile form applies — Zipf counts are
-    # exactly the tie-heavy key its docstring warns about (round-13).
-    summed = global_running_sums(
-        ranked, [F.asc("vocab_size")], {"c": "cum_count"}, block_key="vocab_size"
-    )
+    # Prefix-sum over the RANK (same total order as `order`, but unique,
+    # numeric and ascending): Zipf counts are exactly the tie-heavy key
+    # global_running_sums' docstring warns about.
+    summed = global_running_sums(ranked, "vocab_size", {"c": "cum_count"})
     total = cnt.agg(F.sum("c").cast("bigint").alias("total_tokens"))
     return (
         summed.filter(F.col("vocab_size") <= 1000)

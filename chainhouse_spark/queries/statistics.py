@@ -629,10 +629,10 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: collapse to per-distinct-value counts FIRST (one shuffle), then
     the running counts come from the DISTRIBUTED exact prefix sum
-    (operators/ranking.py::global_running_sums — range partition +
-    per-partition offsets), so nothing ever runs single-task even when
-    values are near-unique (round-5 scale audit replaced the previous
-    unpartitioned window over raw pooled rows).
+    (operators/ranking.py::global_running_sums — quantile blocks of the
+    value + per-block offsets), so nothing ever runs single-task even
+    when values are near-unique (round-5 scale audit replaced the
+    previous unpartitioned window over raw pooled rows).
     """
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
@@ -651,10 +651,7 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (values are unique after the groupBy, so ordering by value alone is
     # total) equals the oracle's last-running-count-per-value collapse.
     steps = global_running_sums(
-        per_value,
-        [F.asc("value")],
-        {"a_cnt": "c_a", "b_cnt": "c_b"},
-        block_key="value",  # unique post-groupBy key: deterministic blocks
+        per_value, "value", {"a_cnt": "c_a", "b_cnt": "c_b"}
     ).select("value", "c_a", "c_b")
     n = pooled.agg(
         F.sum("is_a").alias("n_a"), F.sum("is_b").alias("n_b")
@@ -826,9 +823,9 @@ def stat_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Exclusive prefix (ranks strictly below) = inclusive running sum - t.
     # `c` is unique after the groupBy, so ordering by it alone is total.
-    r = global_running_sums(
-        v, [F.asc("c")], {"t": "c_le"}, block_key="c"
-    ).withColumn("c_lt", F.col("c_le") - F.col("t"))
+    r = global_running_sums(v, "c", {"t": "c_le"}).withColumn(
+        "c_lt", F.col("c_le") - F.col("t")
+    )
     agg = r.agg(
         F.sum("na").cast("double").alias("n1"),
         F.sum("nb").cast("double").alias("n2"),
@@ -2444,9 +2441,9 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = v.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("t"))
     from chainhouse_spark.operators.ranking import global_running_sums
 
-    r = global_running_sums(
-        tot, [F.asc("c")], {"t": "c_le"}, block_key="c"
-    ).withColumn("c_lt", F.col("c_le") - F.col("t"))
+    r = global_running_sums(tot, "c", {"t": "c_le"}).withColumn(
+        "c_lt", F.col("c_le") - F.col("t")
+    )
     grp = (
         v.join(r.select("c", "t", "c_lt"), "c")
         .groupBy("g")
@@ -2541,9 +2538,9 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from chainhouse_spark.operators.ranking import global_running_sums
 
-    r = global_running_sums(
-        v, [F.asc("c")], {"t": "c_le"}, block_key="c"
-    ).withColumn("c_lt", F.col("c_le") - F.col("t"))
+    r = global_running_sums(v, "c", {"t": "c_le"}).withColumn(
+        "c_lt", F.col("c_le") - F.col("t")
+    )
     agg = r.agg(
         F.sum("na").cast("double").alias("n1"),
         F.sum("nb").cast("double").alias("n2"),
@@ -2749,7 +2746,7 @@ def surv_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_users = d.agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
     r = (
-        global_running_sums(lt, [F.asc("dur")], {"w": "w_le"}, block_key="dur")
+        global_running_sums(lt, "dur", {"w": "w_le"})
         .crossJoin(n_users)
         .withColumn("n_risk", F.col("n_users") - (F.col("w_le") - F.col("w")))
     )
@@ -2761,9 +2758,7 @@ def surv_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(ROUND(LN(CAST(n_risk - d AS DOUBLE) / n_risk), 6)"
         " AS DECIMAL(12,6)) AS lterm",
     )
-    curve = global_running_sums(
-        ev, [F.asc("dur")], {"lterm": "log_surv_dec"}, block_key="dur"
-    )
+    curve = global_running_sums(ev, "dur", {"lterm": "log_surv_dec"})
     return curve.selectExpr(
         "CAST(dur AS INT) AS t_day",
         "CAST(n_risk AS BIGINT) AS n_risk",

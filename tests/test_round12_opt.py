@@ -158,26 +158,6 @@ def test_stream_bloom_is_stateless(spark, monkeypatch):
     assert out.count() > 0
 
 
-def test_global_row_number_no_post_checkpoint_exchange(spark):
-    # Round-12 form: the local rank comes from monotonically_increasing_id
-    # above an explicit sortWithinPartitions, so the main data path after
-    # the checkpoint must be scan -> project -> broadcast join — the old
-    # window-by-pid form re-shuffled the full data (Exchange
-    # hashpartitioning(__gr_pid)) per call.
-    from chainhouse_spark.operators.ranking import global_row_number
-
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 37).alias("score"), F.col("id").alias("k")
-    )
-    ranked = global_row_number(df, [F.desc("score"), F.asc("k")], "rk")
-    text = ranked._sc._jvm.PythonSQLUtils.explainString(
-        ranked._jdf.queryExecution(), "formatted"
-    )
-    assert "hashpartitioning(__gr_pid" not in text, text
-    # exactly ONE Window node (the constant-size offsets running sum;
-    # formatted plans print each node twice — tree line + detail header)
-    assert text.count("Window") == 2, text
-
 def test_embedding_near_pairs_salted_equals_unsalted(spark):
     # The salted self-join (left side salted by id, right side replicated
     # over the salt range) must emit exactly the unsalted in-block pair
@@ -227,56 +207,6 @@ def test_embedding_near_pairs_salted_equals_unsalted(spark):
     )
     got = sorted(tuple(r) for r in pairs.collect())
     assert got == want
-
-
-def test_rank_input_evaluated_once(spark):
-    # Round-12 W9: repartitionByRange's boundary-sampling job fully
-    # executes the operator's input subtree, so a MAP-ONLY input is
-    # evaluated exactly 2.0x per call — once for the sample, once for
-    # the shuffle map stage. materialize_input=True makes the sampling
-    # pass double as a lazy-localCheckpoint materialization: exactly 1.0x.
-    # The default stays False because aggregate-shaped inputs already
-    # amortize via shuffle-stage reuse and MEASURED a regression when
-    # blanket-materialized (OPTIMIZATION_r12.md W9). Rank/prefix values
-    # are boundary-independent, so this is behavior-only (results pinned
-    # elsewhere). Both modes pinned here with an accumulator probe.
-    from chainhouse_spark.operators.ranking import (
-        global_row_number,
-        global_running_sums,
-    )
-
-    sc = spark.sparkContext
-    n = 5000
-
-    def probe(op, **kw):
-        acc = sc.accumulator(0)
-
-        def bump(x):
-            acc.add(1)
-            return x
-
-        bump_udf = F.udf(bump, "long").asNondeterministic()
-        df = spark.range(n).select(
-            bump_udf("id").alias("k"),
-            (F.col("id") % 97).alias("score"),
-            F.lit(1).alias("c"),
-        )
-        if op == "rank":
-            out = global_row_number(
-                df, [F.desc("score"), F.asc("k")], "rk", **kw
-            )
-        else:
-            out = global_running_sums(df, [F.asc("k")], {"c": "cum"}, **kw)
-        out.write.format("noop").mode("overwrite").save()
-        return acc.value / n
-
-    assert probe("rank", materialize_input=True) == 1.0
-    assert probe("sums", materialize_input=True) == 1.0
-    # the False default is a deliberate, measured choice for
-    # aggregate-shaped inputs — pin the 2.0x so an accidental blanket
-    # flip (either way) shows up here
-    assert probe("rank") == 2.0
-    assert probe("sums") == 2.0
 
 
 def test_stream_bloom_probe_evaluated_once(spark, monkeypatch):

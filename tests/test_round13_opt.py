@@ -147,105 +147,6 @@ def test_star_loop_equivalence_and_earlier_exit(spark, monkeypatch):
     assert new_rounds == ref_rounds - 1, (new_rounds, ref_rounds)
 
 
-def _sums_rows(df, key):
-    return sorted(
-        tuple(r) for r in df.collect()
-    )
-
-
-@pytest.mark.parametrize(
-    "rows",
-    [
-        [(float(i), i % 7 + 1, float(i) / 3.0) for i in range(1, 500)],
-        [(float(i) ** 2, 1, 0.5) for i in range(1, 50)],  # skewed keys
-        [(-5.0, 3, 1.0), (0.0, 4, 2.0), (7.5, 5, 3.0)],  # negatives
-        [(1.0, 2, 1.0)],  # single row
-        [],  # empty
-        [(3.0, i, 1.0) for i in range(1, 20)],  # constant key (one block)
-    ],
-)
-def test_block_running_sums_matches_range_form(spark, rows):
-    """The block-quantile form (round-13) must produce per-row-identical
-    running sums to the range-partitioned form for any key distribution —
-    including the degenerate single-block case (all keys equal; summed
-    columns here are tie-invariant totals so the collapse is
-    well-defined), negatives, and empty input."""
-    from chainhouse_spark.operators.ranking import global_running_sums
-
-    df = spark.createDataFrame(rows, "k double, a long, x double")
-    # constant-key case: ties share a key, so sum per-key must collapse —
-    # compare the per-key LAST running sum (the ECDF-step contract)
-    old = global_running_sums(df, [F.asc("k")], {"a": "ca", "x": "cx"})
-    new = global_running_sums(
-        df, [F.asc("k")], {"a": "ca", "x": "cx"}, block_key="k"
-    )
-    old_steps = sorted(
-        tuple(r)
-        for r in old.groupBy("k").agg(F.max("ca"), F.max("cx")).collect()
-    )
-    new_steps = sorted(
-        tuple(r)
-        for r in new.groupBy("k").agg(F.max("ca"), F.max("cx")).collect()
-    )
-    assert new_steps == old_steps
-    # schema (names, types, order) must be identical too
-    assert new.schema == old.schema
-
-
-def test_block_running_sums_null_keys_first(spark):
-    from chainhouse_spark.operators.ranking import global_running_sums
-
-    df = spark.createDataFrame(
-        [(None, 10), (1.0, 1), (2.0, 2), (None, 5)], "k double, a long"
-    )
-    new = global_running_sums(df, [F.asc("k")], {"a": "ca"}, block_key="k")
-    old = global_running_sums(df, [F.asc("k")], {"a": "ca"})
-    # NULL keys sort first (ASC NULLS FIRST) in both forms; totals at the
-    # non-null keys must agree exactly.
-    get = lambda d: {r.k: r.ca for r in d.collect() if r.k is not None}
-    assert get(new) == get(old) == {1.0: 16, 2.0: 18}
-
-
-def test_block_running_sums_runs_fewer_shuffles(spark):
-    """The whole point of the block form: ONE full-data exchange (hash on
-    the deterministic block id) instead of range-exchange + checkpoint +
-    hash-exchange. Pin via the stage count of the executed job group —
-    fewer shuffle boundaries = fewer stages for the same query."""
-    import uuid
-
-    from chainhouse_spark.operators.ranking import global_running_sums
-
-    df = spark.range(1, 20001).select(
-        (F.col("id") % 977).cast("double").alias("k0"),
-        F.lit(1).alias("one"),
-    )
-    grouped = df.groupBy("k0").agg(F.sum("one").alias("t"))
-
-    def stages(fn) -> int:
-        group = f"r13-{uuid.uuid4()}"
-        sc = spark.sparkContext
-        sc.setJobGroup(group, "stage-count")
-        fn().write.format("noop").mode("overwrite").save()
-        sc.setJobGroup(None, None)
-        tracker = sc.statusTracker()
-        sids = set()
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            if info:
-                sids.update(info.stageIds)
-        return len(sids)
-
-    n_old = stages(
-        lambda: global_running_sums(grouped, [F.asc("k0")], {"t": "ct"})
-    )
-    n_new = stages(
-        lambda: global_running_sums(
-            grouped, [F.asc("k0")], {"t": "ct"}, block_key="k0"
-        )
-    )
-    assert n_new < n_old, (n_new, n_old)
-
-
 def test_star_loop_converged_input_single_round(spark):
     # Input already a star forest: exactly one (identity) round, exit.
     edges = spark.createDataFrame(
@@ -253,71 +154,3 @@ def test_star_loop_converged_input_single_round(spark):
     )
     got = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
     assert got == {5: 1, 3: 1, 9: 1, 1: 1}
-
-
-def _running_sum_forms(df, key="k"):
-    """Both global_running_sums forms at several partition counts."""
-    from chainhouse_spark.operators.ranking import global_running_sums
-
-    for p in (2, 4, 7, 16):
-        yield f"range/P={p}", global_running_sums(
-            df, [F.asc(key)], {"x": "cx"}, num_partitions=p
-        )
-        yield f"block/P={p}", global_running_sums(
-            df, [F.asc(key)], {"x": "cx"}, num_partitions=p, block_key=key
-        )
-
-
-def test_double_running_sums_are_boundary_independent(spark):
-    """DOUBLE running sums are exact (summed in DECIMAL(38,18), rounded
-    once to DOUBLE), so every form and partition count gives the same
-    bits: the property rows0 above checks at one partition count only.
-    x = i/3 does not add exactly in binary, so IEEE summation in a
-    boundary-dependent order would differ in the last bit."""
-    from decimal import Decimal, localcontext
-
-    n = 1999
-    df = spark.createDataFrame(
-        [(float(i), i / 3.0) for i in range(1, n + 1)], "k double, x double"
-    )
-    # Oracle: Spark's own decimal image of each summand, summed exactly
-    # in Python and rounded once (float(Decimal) rounds correctly).
-    twins = df.select("k", F.col("x").cast("decimal(38,18)").alias("d"))
-    want, acc = {}, Decimal(0)
-    with localcontext(prec=60):  # exact: 38 digits never round
-        for r in sorted(twins.collect()):
-            acc += r.d
-            want[r.k] = float(acc)
-    schema = "struct<k:double,x:double,cx:double>"
-    for form, out in _running_sum_forms(df):
-        assert dict(out.select("k", "cx").collect()) == want, form
-        assert out.schema.simpleString() == schema, form
-
-
-@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
-def test_running_sums_raise_on_non_finite_summand(spark, bad):
-    """A NaN or ±Inf summand has no decimal image; it must fail loudly,
-    naming the column, in both forms — never be skipped by SUM and never
-    come back as a NULL running sum."""
-    rows = [(float(i), float(i) / 3.0) for i in range(1, 40)] + [(50.0, bad)]
-    df = spark.createDataFrame(rows, "k double, x double")
-    for form, out in _running_sum_forms(df):
-        with pytest.raises(Exception, match="column 'x'"):
-            out.collect()
-
-
-@pytest.mark.parametrize("typ", ["long", "double"])
-def test_running_sums_carry_prefix_over_null_summands(spark, typ):
-    """A row whose part has only NULL summands up to it gets the preceding
-    prefix, as a global window's SUM gives it, in both forms at every
-    partition count; a prefix of NULLs alone stays NULL. The block form at
-    P=7 puts the NULL at k=50 alone in its block, so its local sum is
-    NULL and the offset alone carries the prefix."""
-    num = float if typ == "double" else int
-    rows = [(0.0, None)] + [(float(i), num(i)) for i in range(1, 40)]
-    rows.append((50.0, None))
-    df = spark.createDataFrame(rows, f"k double, x {typ}")
-    want = {0.0: None, 50.0: 780}
-    want.update({float(i): i * (i + 1) // 2 for i in range(1, 40)})
-    for form, out in _running_sum_forms(df):
-        assert dict(out.select("k", "cx").collect()) == want, form
