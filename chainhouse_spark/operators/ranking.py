@@ -220,12 +220,7 @@ def global_running_sums(
     # Boundaries become literals, so the block id is a pure row function.
     bounds = df.stat.approxQuantile(key, probs, 1.0 / (4 * n_blocks))
     bounds = sorted({b for b in bounds if b == b})  # dedupe, drop NaN
-    if bounds:
-        barr = F.array(*[F.lit(float(b)) for b in bounds])
-        k = F.col(key).cast("double")
-        blk = F.size(F.filter(barr, lambda b: b < k))
-    else:
-        blk = F.lit(0)
+    blk = _count_below(bounds, F.col(key).cast("double"))
     tagged, summed = _decimal_twins(df.withColumn(_BLK, blk), sum_cols)
     offsets = _part_offsets(
         tagged, _BLK, {src: F.sum(col) for src, col in summed.items()}
@@ -248,6 +243,37 @@ def global_running_sums(
             )
     twins = [col for src, col in summed.items() if col != src]
     return out.drop(_BLK, *twins, *[f"__o_{src}" for src in sum_cols])
+
+
+def _count_below(bounds: list[float], k: Column) -> Column:
+    """The number of `bounds` (ascending, no NaN) strictly below `k`: 0
+    for a NULL `k`, all of them for a NaN `k`.
+
+    A branchless binary search over ONE array literal, log2(n) lookups
+    per row. The array is NaN-padded to 2^m - 1 slots (NaN is above every
+    number in Spark's order, and not below itself), so every probe is in
+    range and the pads never count. Two requirements shape it:
+
+    - no lambda: Catalyst canonicalizes lambda variables to small
+      expression ids, which collide with a key column whose id is one
+      of them; constraint inference then pushed the block id of a
+      `filter(bounds, b -> b < key)` onto the offsets side of the join,
+      where the key does not exist;
+    - the boundaries are the values of one literal, which generated
+      code reads from a reference, not inlined constants, so the
+      generated class is the same whatever the data (only m varies) and
+      repeat calls hit the codegen cache.
+    """
+    size = 1 << len(bounds).bit_length()
+    pads = [float("nan")] * (size - 1 - len(bounds))
+    padded = F.array(*[F.lit(b) for b in bounds + pads])
+    pos = F.lit(0)
+    step = size // 2
+    while step:
+        probe = F.element_at(padded, pos + step) < k
+        pos = pos + F.when(probe, step).otherwise(0)
+        step //= 2
+    return pos
 
 
 # Float summands are accumulated in this decimal; the final offset + local

@@ -70,9 +70,38 @@ def build_spark(
         # locally it keeps small files from over-splitting.
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Generated-class cache: the JVM-wide LRU of Janino-compiled
+        # classes, keyed by the generated source. Its default of 100 entries
+        # is smaller than the engine's working set (about 150 classes per
+        # perfbench analytics pass, 130 per ingest pass, 615 for bench.py's
+        # 37 headline queries at sf0.1), so a repeat pass found every class
+        # evicted and compiled it again: 141 classes per timed analytics
+        # pass, 138 per ingest pass, about 830 per bench.py round. At 2048
+        # (about 3x bench.py's set) repeat passes compile 0, 0 and 8 (the
+        # limit counters of semantic_dedup_cells), and peak RSS rises about
+        # 1% (2532 -> 2554 MB on analytics). The static conf is read once
+        # per JVM, at the first compile. tests/test_session.py pins it.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # The cache key is the generated source, and by default the class
+        # name carries the whole-stage codegen id, which AQE numbers in the
+        # order it plans query stages: the same stage of the same query
+        # got another id on a later run (audience_rfm_segments, ts_hurst_rs,
+        # graph_modularity) and was compiled again as a new class.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Classes Janino has compiled in this JVM so far, and their total
+    compile time in ms. Both count cache misses only; take the difference
+    of two readings to count the compiles of the work between them."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    count = metrics.METRIC_COMPILATION_TIME().getCount()
+    return int(count), generator.compileTime() / 1e6

@@ -270,6 +270,68 @@ def test_block_running_sums_runs_fewer_shuffles(spark):
     assert n == 15, n
 
 
+_FIRST_COLUMN_KEY = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from chainhouse_spark.operators.ranking import global_running_sums
+from chainhouse_spark.session import build_spark
+
+spark = build_spark(app_name="ranking-first-key", master="local[2]",
+                    shuffle_partitions=4)
+# k0 is the first column this JVM names: expression id 1.
+df = spark.range(1, 20001).select(
+    (F.col("id") % 977).cast("double").alias("k0"), F.lit(1).alias("one")
+)
+grouped = df.groupBy("k0").agg(F.sum("one").alias("t"))
+out = global_running_sums(grouped, "k0", {"t": "ct"})
+print("MAX_CT", out.agg(F.max("ct")).first()[0])
+spark.stop()
+"""
+
+
+def test_running_sums_key_with_first_expression_id():
+    """A key whose expression id is 1 only exists in a fresh JVM, so the
+    call runs in a subprocess. Catalyst canonicalizes lambda variables to
+    small ids; a lambda-based block id collided with the key there and
+    failed with "Could not find k0#1"."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FIRST_COLUMN_KEY, root],
+        capture_output=True, text=True, timeout=600, env=env,
+    )
+    assert "MAX_CT 20000" in proc.stdout, proc.stderr[-3000:]
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 3, 4, 7, 8, 12])
+def test_block_id_counts_bounds_below_key(spark, n):
+    """The block id is the number of boundaries strictly below the key,
+    as `bisect_left` gives it; NULL keys count 0 and NaN keys all."""
+    from bisect import bisect_left
+
+    from chainhouse_spark.operators.ranking import _count_below
+
+    bounds = [float(2 * i) for i in range(n)]
+    keys = [float(x) / 2 for x in range(-2, 4 * n + 3)] + [
+        float("-inf"), float("inf"), _NAN, None
+    ]
+    df = spark.createDataFrame([(k,) for k in keys], "k double")
+    got = df.select("k", _count_below(bounds, F.col("k")).alias("b")).collect()
+    for r in got:
+        if r.k is None:
+            want = 0
+        elif r.k != r.k:
+            want = n
+        else:
+            want = bisect_left(bounds, r.k)
+        assert r.b == want, (n, r.k, r.b, want)
+
+
 def test_running_sums_reject_non_numeric_key_at_construction(spark):
     """The quantile job runs while the DataFrame is built, so a key that
     is not numeric fails at the call, before anything is executed."""
