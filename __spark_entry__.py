@@ -8,6 +8,12 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 All queries live in ``chainhouse_spark/queries/`` and self-register into
 ``chainhouse_spark.queries.registry`` at import time; this module is a thin
 adapter over that registry.
+
+The driver checks about 50 queries a round, in the order ``queries()``
+returns them. That order is derived at import, not kept by hand
+(``chainhouse_spark/queries/rotation.py``): queries whose last verdict is
+not green or whose plan fingerprint changed since it come first, then
+never-checked queries, then green unchanged ones, oldest verdict first.
 """
 
 from __future__ import annotations

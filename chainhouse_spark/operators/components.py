@@ -19,7 +19,12 @@ Spark mechanics that matter at scale:
   loop) — a single map-side-combinable exchange, never a join of the two
   generations; the star loop's check reads ONE generation and exits on
   the first star-forest round, one full round before a generation diff
-  could.
+  could;
+- the check's action is `isEmpty()`: a take of one row straight off the
+  aggregate. `limit(1).count()` planned a second, single-partition
+  exchange (one more job per round) and a whole-stage-codegen limit whose
+  counter field is named from a JVM-wide sequence, so its generated class
+  never hit the codegen cache and was compiled again on every round.
 
 Iterative -> not SQL-expressible as one query in Spark, but the fixpoint IS
 expressible as a recursive CTE in DuckDB, so the cluster query in
@@ -132,15 +137,15 @@ def connected_components(
                 "node",
                 F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
             )
-            # eager=False: the convergence count below materializes this
+            # eager=False: the convergence check below materializes this
             # round's labels in the SAME job — one Spark job per round
-            # instead of checkpoint-job + count-job (guide §1.2: fewer
+            # instead of checkpoint-job + check-job (guide §1.2: fewer
             # actions, identical lineage-cut semantics).
             .localCheckpoint(eager=False)
         )
-        changed = _changed_nodes(new_labels, labels).limit(1).count()
+        converged = _changed_nodes(new_labels, labels).isEmpty()
         labels = new_labels
-        if changed == 0:
+        if converged:
             break
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
@@ -186,7 +191,7 @@ def connected_components_star(
             F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")
         )
         .distinct()
-        # eager=False throughout the loop: each round's convergence count
+        # eager=False throughout the loop: each round's convergence check
         # materializes the round's two half-step checkpoints and this seed
         # in ONE job — the eager form paid 3 driver-blocking jobs per
         # round (2 checkpoints + count), measured ~25% of the star loop's
@@ -221,11 +226,11 @@ def connected_components_star(
         )
         # Round-13: star-forest test on e_new alone — fires one round
         # earlier than diffing against e (see _non_star_nodes), and this
-        # count is still the ONE job that materializes the round's lazy
+        # check is still the ONE job that materializes the round's lazy
         # checkpoints.
-        not_star = _non_star_nodes(e_new).limit(1).count()
+        converged = _non_star_nodes(e_new).isEmpty()
         e = e_new
-        if not_star == 0:
+        if converged:
             break
     roots = e.select(F.col("v").alias("node")).subtract(
         e.select(F.col("u").alias("node"))

@@ -3,20 +3,21 @@
 Importing this package loads every query module, which registers each query
 with the registry in `registry.py`. `__spark_entry__.py` exposes the registry
 to the driver.
+
+The driver oracle-checks about 50 queries a round, in registry order, so
+the order is the rotation: once every module has registered, `QUERIES`
+and `ORACLES` are reordered by `rotation.rotation_order` over the driver's
+verdicts (`CORRECTNESS_r*.json`) and the committed plan fingerprints
+(`fingerprints.json`). Queries that failed their last verdict or whose
+plan changed since it come first, then never-checked queries, then green
+unchanged ones, oldest verdict first. The import order below only breaks
+ties. Regenerate the fingerprints with `python tools/query_rotation.py
+--write` after changing a query or an operator.
 """
 
 from chainhouse_spark.queries.registry import QUERIES, ORACLES, register  # noqa: F401
 
 # Import for side effect: each module registers its queries.
-#
-# ORDER MATTERS for driver verification: the driver's per-round oracle check
-# walks queries in registration order and (empirically, rounds 1-2) covers
-# ~50 per round. After all modules import, `_rotate()` below rebuilds the
-# registry order for round 3: queries needing a driver RE-check first (the
-# 8 non-green rows from r01/r02 plus the two simhash queries whose
-# implementation changed this round), then the 89 queries that have never
-# received a driver verdict, then the cross-round driver-green set at the
-# back (their green rows stand; code audited unchanged).
 from chainhouse_spark.queries import llm_dedup  # noqa: E402,F401
 from chainhouse_spark.queries import llm_similarity  # noqa: E402,F401
 from chainhouse_spark.queries import llm_text  # noqa: E402,F401
@@ -49,463 +50,18 @@ from chainhouse_spark.queries import tpch_extended  # noqa: E402,F401
 from chainhouse_spark.queries import tpch_complete  # noqa: E402,F401
 from chainhouse_spark.queries import joins  # noqa: E402,F401
 from chainhouse_spark.queries import aggregates  # noqa: E402,F401
-
-# Round-3 additions — imported LAST so their (never-driver-checked) queries
-# queue behind the existing never-checked block in the rotation below.
-# streaming_queries holds the driver-checkable Structured Streaming set
-# (pq/containment additions live in llm_advanced).
 from chainhouse_spark.queries import llm_advanced  # noqa: E402,F401
 from chainhouse_spark.queries import ch_frontend  # noqa: E402,F401
 from chainhouse_spark.queries import streaming_queries  # noqa: E402,F401
-
-# Round-4 additions — land in the rotation's mid bucket (after the 82
-# never-checked names, before the driver-green back), i.e. round-6+ windows.
 from chainhouse_spark.queries import llm_training  # noqa: E402,F401
-
-# Round-5 additions — mid bucket, round-6 window.
 from chainhouse_spark.queries import bpe_queries  # noqa: E402,F401
-
-# Round-12 additions — semantic decontamination + the IVF trained-cell
-# dedup variant (VERDICT r11 tasks 3-4); fronted via _ROUND12_FRONT below.
 from chainhouse_spark.queries import llm_contamination  # noqa: E402,F401
+from chainhouse_spark.queries import rotation  # noqa: E402
 
-# Round-9 rotation (VERDICT r08 tasks 1-2). The round-9 float-convention
-# pass applied round-at-9 to 78 queries' emitted float columns (both the
-# Spark and oracle sides), so their cumulative green driver rows no longer
-# reflect current output values. All 78 need fresh adjudication; the ~50-row
-# window takes the 50 deepest-formula queries this round (_ROUND9_FRONT:
-# statistics, timeseries, ANN/embedding, windows, graph, ndcg, sketches,
-# jaccard families). The remaining 28 (_ROUND10_HEAD: simple single-division
-# ratios, all locally exact-repr-verified at sf0.01 via
-# tests/test_oracle_parity.py) sit DIRECTLY behind them so the round-10
-# window re-adjudicates them first thing next round. 9 further sweep
-# offenders changed nothing (exempt-only: registry.ROUND9_EXEMPT) and keep
-# their green rows. The green back-block is the cumulative r01-r08 union
-# regenerated by tools/build_rotation.py.
-#
-# The SEVENTEEN new round-9 queries (stat_kruskal_wallis, eval_auc_roc,
-# stat_theils_u, surv_kaplan_meier, drift_js_divergence,
-# eval_retrieval_map, text_simpson_diversity, ts_theil_sen_slope,
-# graph_modularity, stat_jarque_bera, text_burstiness, ts_hurst_rs,
-# eval_confusion_mcc, text_ngram_entropy_rate, stat_randomization_test,
-# stream_psi_drift, drift_ks_by_source — never driver-checked) fall into
-# the mid bucket
-# automatically (registered, not green, not fronted), i.e. directly
-# behind the 31-name head: round-10 window = 30 stale-green + 16 new =
-# 46 rows.
-_ROUND9_FRONT = [
-    "stat_ab_power_mde",
-    "stat_arrival_burstiness",
-    "stat_benford_audit",
-    "stat_bootstrap_se",
-    "stat_corr_regression",
-    "stat_cuped_variance_reduction",
-    "stat_diff_in_diff",
-    "stat_gini_concentration",
-    "stat_ks_two_sample",
-    "stat_mann_whitney_u",
-    "stat_moments",
-    "stat_mutual_information",
-    "stat_runs_test",
-    "stat_spearman_corr",
-    "stat_srm_check",
-    "stat_time_weighted_avg",
-    "stat_trimmed_mean",
-    "stat_welch_ttest",
-    "stat_zscore_outliers",
-    "ts_anomaly_seasonal_zscore",
-    "ts_autocorrelation",
-    "ts_interpolate_linear",
-    "ts_rolling_mad_anomaly",
-    "ts_seasonal_naive_error",
-    "ts_seasonality_strength",
-    "ann_bruteforce_topk",
-    "ann_lsh_multiprobe_topk",
-    "ann_lsh_topk",
-    "ann_projected_lsh_topk",
-    "ann_quantized_topk",
-    "ann_range_search",
-    "ann_two_stage_rerank",
-    "embedding_centroid_drift",
-    "embedding_class_separation",
-    "embedding_near_pairs",
-    "embedding_norms",
-    "embedding_quantize_int8",
-    "embedding_random_projection",
-    "window_moving_median",
-    "window_rank_fractions",
-    "window_rolling_corr",
-    "graph_assortativity",
-    "graph_link_prediction",
-    "eval_retrieval_ndcg",
-    "sketch_hll_registers",
-    "corpus_overlap_minhash",
-    "corpus_zipf_fit",
-    "dedup_containment",
-    "dedup_ngram_jaccard",
-    "dedup_ppjoin_exact",
-]
-
-# Output-changed in round 9 but outside the ~50-row window — MUST head the
-# round-10 rotation (re-front these before anything else next round).
-# The first three entries changed LATE in round 9: the sf0.01 convention
-# audit flagged raw unrounded emissions (avg_value / mkt_share), and the
-# drift-monitor snapshot split moved from doc_id parity (constant within
-# a source in this data — each source compared against an EMPTY sample)
-# to a deterministic md5 bit — values changed, green rows stale.
-# (ts_rolling_mad_anomaly's med column changed the same way but already
-# sits in this round's _ROUND9_FRONT window, so the round-9 driver
-# adjudicates it on the final code.)
-_ROUND10_HEAD = [  # 31 stale-green (output changed in the round-9 sweep)
-    "ts_rollup_minute",
-    "q8_market_share",
-    "drift_psi_by_source",
-    "nb_classwise_f1",
-    "nb_margin_calibration",
-    "lm_bigram_perplexity_rank",
-    "tfidf_top_terms",
-    "text_hapax_ratio",
-    "text_quality_scores",
-    "text_rarity_score",
-    "text_readability_fk",
-    "text_repetition_metrics",
-    "text_token_stats",
-    "mm_audio_quality",
-    "mm_image_features",
-    "sample_temperature_mixing",
-    "dataset_card_by_source",
-    "mixture_token_budget_plan",
-    "batch_by_length_buckets",
-    "bpe_encode_compression",
-    "funnel_retention_conditions",
-    "sequence_transition_matrix",
-    "join_skew_preflight",
-    "asof_tolerance_join",
-    "eth_block_fullness",
-    "eth_type2_fee_stats",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q14_promo_revenue",
-    "scalar_math_funcs",
-    "filter_quality_gate_by_source",
-]
-
-# Round-10 rotation (VERDICT r09 task 1). CORRECTNESS_r09 adjudicated the
-# _ROUND9_FRONT 50 green (50/50), so they move to the green back-block and
-# the round-10 window = _ROUND10_HEAD (31 stale-green, registered above) +
-# the 17 round-9-new queries (never driver-checked, registration order).
-# 48 rows; new round-10 queries land in the mid bucket directly behind
-# (positions 49-50 of the ~50-row window). After this window lands, every
-# registered query holds a driver verdict on current output values.
-_ROUND10_NEW9 = [
-    "text_simpson_diversity",
-    "text_burstiness",
-    "text_ngram_entropy_rate",
-    "eval_confusion_mcc",
-    "eval_retrieval_map",
-    "stat_kruskal_wallis",
-    "eval_auc_roc",
-    "stat_theils_u",
-    "surv_kaplan_meier",
-    "drift_js_divergence",
-    "stat_jarque_bera",
-    "stat_randomization_test",
-    "drift_ks_by_source",
-    "ts_theil_sen_slope",
-    "ts_hurst_rs",
-    "graph_modularity",
-    "stream_psi_drift",
-]
-_ROUND10_FRONT = _ROUND10_HEAD + _ROUND10_NEW9 + [
-    # Round-10 additions completing the ~50-row window (positions 49-50).
-    # contamination_rate_by_source (also new this round) stays in the mid
-    # bucket at position 51 — first in the round-11 window.
-    "contamination_span_report",
-    "ch_dialect_totals_sample",
-]
-
-# Output-changed queries sitting OUTSIDE the current round's driver window
-# (stale green rows). Anything appended here during the round MUST lead the
-# NEXT round's front; tools/build_rotation.py screams about every entry.
-# Empty right now: no adjudicated query's emitted values changed during
-# round 11 (the semantic_dedup_cells star-components switch is
-# value-identical — parity-proven — and it sits inside this window anyway;
-# the ch_dialect SAMPLE/topK fixes only change behavior for inputs no
-# registered query contains).
-_STALE_CARRYOVER: list = []
-
-# Round-12 rotation (VERDICT r11 task 1). CORRECTNESS_r11 adjudicated the
-# round-11 window 50/50 green, so _ROUND11_FRONT moves to the green
-# back-block (the |= below). Only TWO queries lack a driver verdict —
-# the final two round-11 commits (span_corruption_targets,
-# drift_ks_norm_by_source), registered after the round-11 window closed;
-# both pass the stricter local exact-repr gate. They lead the round-12
-# front. Behind them: the NINE round-12 additions (the semantic
-# decontamination family + the IVF trained-cell dedup variant — all
-# registered and local-green well before the window), then the
-# oldest-vintage green back-fill to ~50 — ALL r01 rows (10: the TPC-H
-# q10–q13/q17–q22 tail), ALL r02 rows (21), and the oldest r03 rows in
-# registration order — 11-round-old greens re-adjudicated against silent
-# environment drift, the same guard VERDICT r10 task 1 established.
-# With 11 fronted non-backfill rows plus 31 r01/r02 rows, the ~50-row
-# window cut lands ~8 rows into the 11-row r03 block; r03 rows past the
-# cut keep their green vintage and lead the round-13 back-fill.
-#
-# ROUND-13 ROTATION TODO (mechanical, do first): once CORRECTNESS_r12
-# lands green, move _ROUND12_FRONT into _DRIVER_GREEN (the |= pattern
-# below) and build _ROUND13_FRONT: any non-green r12 row leads; then any
-# round-13 additions; then back-fill with the oldest-vintage greens —
-# the r03 rows the round-12 cut didn't reach plus the remaining r03/r04
-# block (tools/build_rotation.py prints per-round vintages). If r12 is
-# 50/50, never-checked should again be 0 for everything registered
-# before the window.
-_ROUND12_NEVER2 = [  # round-11 post-window additions, never driver-checked
-    "drift_ks_norm_by_source",
-    "span_corruption_targets",
-]
-_ROUND12_FRONT = _ROUND12_NEVER2 + [
-    # Round-12 additions (registered this round). VERDICT r11 task 3:
-    # semantic decontamination; task 4: the IVF-trained-cell swap for
-    # semantic dedup, proven as an oracled end-to-end variant.
-    "contamination_semantic_cells",
-    "semantic_dedup_ivf_cells",
-    "contamination_semantic_by_cell",
-    "semantic_purge_plan",
-    "contamination_lexical_vs_semantic",
-    "contamination_semantic_nearest",
-    # Round-12 wave 2: the family's threshold planner and the streaming
-    # twin of semantic_purge_plan:
-    "contamination_semantic_tau_sweep",
-    "stream_semantic_decontaminate",
-    "semantic_decontaminate_manifest",
-    # r01-vintage green back-fill (oldest driver rows in the registry —
-    # last adjudicated round 1):
-    "q10_returned_items", "q11_important_parts", "q12_lateness_priority",
-    "q13_customer_distribution", "q17_small_quantity_revenue",
-    "q18_large_orders", "q19_disjunctive_revenue", "q20_excess_suppliers",
-    "q21_waiting_supplier", "q22_idle_customers",
-    # r02-vintage green back-fill (last adjudicated round 2):
-    "asof_next_error", "asof_purchase_click", "attribution_last_click",
-    "audience_overlap_matrix", "dataset_profile",
-    "decontaminate_against_testset", "funnel_depth_histogram",
-    "funnel_steps", "interval_join_binned", "pack_documents_greedy",
-    "pipeline_clean_corpus", "range_join_sessions", "retention_weekly",
-    "search_bm25_topk", "search_hybrid_rrf", "search_inverted_index",
-    "sequence_match_regex", "sequence_pairs_click_purchase",
-    "split_train_test_hash", "text_chunk_chars", "text_chunk_words",
-    # r03-vintage back-fill (oldest r03 rows, registration order) —
-    # fills the window to ~50; rows past the driver's actual cut simply
-    # keep their green vintage and lead the round-13 back-fill:
-    "sample_stratified_per_lang", "interleave_weighted_sources",
-    "search_phrase_match", "audience_overlap_hll", "mm_metadata_stats",
-    "mm_frame_sample", "mm_audio_features", "mm_image_resize",
-    "stat_histogram_fixed_bins", "agg_conditional_bool", "stat_median_iqr",
-]
-
-# Round-11 rotation (VERDICT r10 task 1). CORRECTNESS_r10 adjudicated the
-# _ROUND10_FRONT 50/50 green, so it moves to the green back-block (the |=
-# below). The round-11 window fronts the NINE round-10 additions (the only
-# never-driver-checked queries registry-wide; registration order as
-# printed by tools/build_rotation.py), then the round-11 NEW queries
-# (never checked — adjudicate them this round rather than leaving a
-# never-checked residue), then back-fills to ~50 with the OLDEST green
-# rows: all 45 still-green rows last adjudicated in round 1 minus the six
-# tail TPC-H queries (q17–q22) — re-adjudicating 10-round-old greens
-# guards against silent environment drift (VERDICT r10 task 1).
-_ROUND11_NEW9 = [  # round-10 additions, never driver-checked
-    "contamination_rate_by_source",
-    "dedup_lsh_band_plan",
-    "dedup_impact_on_mixture",
-    "dedup_lsh_recall_report",
-    "vocab_coverage_curve",
-    "eval_brier_decomposition",
-    "drift_column_profile",
-    "drift_ks_fdr_bh",
-    "stream_decontaminate_bloom",
-]
-_ROUND11_FRONT = _ROUND11_NEW9 + [
-    # Round-11 additions registered in time for the window (six of the
-    # eight; the final two — span_corruption_targets and
-    # drift_ks_norm_by_source — landed after the window closed and lead
-    # _ROUND12_NEVER2 above). All six passed the stricter local
-    # exact-repr gate and were adjudicated green in CORRECTNESS_r11:
-    "semantic_dedup_cells",
-    "dedup_minhash_lsh_planned",
-    "span_corruption_plan",
-    "drift_embedding_cells",
-    "semantic_dedup_threshold_sweep",
-    "dedup_modality_overlap",
-    # r01-vintage green back-fill (oldest driver rows in the registry):
-    "agg_cube", "agg_distinct", "agg_grouping_sets", "agg_min_max_by",
-    "agg_mode_deterministic", "agg_percentiles", "agg_rollup",
-    "agg_salted_two_phase", "agg_string_collect", "agg_uniq_up_to",
-    "agg_unpivot", "join_anti", "join_cross", "join_fact_fact",
-    "join_full_outer", "join_inner_broadcast", "join_left_outer",
-    "join_salted_skew", "join_self", "join_semi",
-    "q15_top_supplier", "q16_supplier_count",
-    "q3_shipping_priority", "q4_order_priority", "q5_region_revenue",
-    "q6_forecast_revenue", "q7_nation_volume", "q9_product_profit",
-    "window_first_last", "window_lag_lead", "window_range_interval_frame",
-    "window_rank_dense_ntile", "window_running_sum",
-    "window_sliding_frame", "window_topn_per_group",
-]
-
-# cumulative green union (r01-r08, regenerated):
-_DRIVER_GREEN = {
-    "agg_approx_distinct", "agg_conditional_bool", "agg_cube",
-    "agg_distinct", "agg_grouping_sets", "agg_min_max_by",
-    "agg_mode_deterministic", "agg_percentiles", "agg_pivot", "agg_rollup",
-    "agg_rollup_reagg", "agg_salted_two_phase", "agg_string_collect",
-    "agg_sum_map_merge", "agg_uniq_up_to", "agg_unpivot",
-    "ann_binary_hamming_topk", "ann_bruteforce_gemm", "ann_bruteforce_topk",
-    "ann_ivf_at_rest_topk", "ann_ivf_topk", "ann_ivfpq_topk",
-    "ann_knn_classify", "ann_lsh_multiprobe_topk", "ann_lsh_recall_report",
-    "ann_lsh_topk", "ann_pq_topk", "ann_projected_lsh_topk",
-    "ann_quantized_topk", "ann_range_search", "ann_two_stage_rerank",
-    "array_set_algebra", "array_zip_positional", "asof_interpolated_value",
-    "asof_nearest_click", "asof_next_error", "asof_purchase_click",
-    "asof_tolerance_join", "attribution_last_click",
-    "attribution_position_based", "audience_engagement_decay",
-    "audience_ltv_cohort", "audience_overlap_hll", "audience_overlap_matrix",
-    "audience_rfm_segments", "basket_pair_lift", "batch_by_length_buckets",
-    "bpe_encode_compression", "bpe_pair_stats", "bpe_train_merges",
-    "cdc_snapshot_diff", "ch_dialect_frontend", "ch_dialect_ip_rollup",
-    "ch_dialect_json_buckets", "ch_dialect_qualify", "ch_dialect_url_funcs",
-    "cluster_kmeans_summary", "corpus_ngram_novelty",
-    "corpus_overlap_minhash", "corpus_shuffle_shards", "corpus_zipf_fit",
-    "curriculum_difficulty_order", "dataset_card_by_source",
-    "dataset_profile", "decontaminate_against_testset",
-    "decontaminate_bloom", "decontaminate_neardup_lsh",
-    "dedup_cluster_size_histogram", "dedup_clusters_star",
-    "dedup_containment", "dedup_duplicate_clusters",
-    "dedup_edit_distance_pairs", "dedup_exact", "dedup_exact_normalized",
-    "dedup_minhash_incremental", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_ppjoin_exact", "dedup_shard_consistency", "dedup_simhash",
-    "dedup_simhash_pairs", "dedup_substring_spans", "dedup_threshold_sweep",
-    "drift_psi_by_source", "dsir_importance_select",
-    "embedding_centroid_drift", "embedding_class_separation",
-    "embedding_near_pairs", "embedding_norms", "embedding_quantize_int8",
-    "embedding_random_projection", "eth_access_list_stats",
-    "eth_address_net_flow", "eth_base_fee_projection",
-    "eth_basefee_fullness_corr", "eth_block_fullness",
-    "eth_block_interval_stats", "eth_blocks_table", "eth_contract_creations",
-    "eth_effective_gas_price_stats", "eth_erc20_transfer_decode",
-    "eth_event_topics", "eth_fee_burn", "eth_gas_by_block",
-    "eth_log_address_activity", "eth_log_payload_stats", "eth_miner_tips",
-    "eth_nonce_gaps", "eth_reorg_canonical", "eth_selector_histogram",
-    "eth_top_senders", "eth_topic0_entropy", "eth_type2_fee_stats",
-    "eth_uncle_rate", "eth_value_gini", "eth_withdrawal_totals",
-    "eval_cohens_kappa", "eval_ranker_agreement", "eval_retrieval_ndcg",
-    "export_training_shards", "feature_hashing_vectorize",
-    "filter_quality_gate_by_source", "funnel_depth_histogram",
-    "funnel_latency_percentiles", "funnel_retention_conditions",
-    "funnel_steps", "funnel_time_to_convert", "geo_grid_near_pairs",
-    "graph_assortativity", "graph_bfs_hops", "graph_degree_distribution",
-    "graph_kcore_peel", "graph_label_propagation", "graph_link_prediction",
-    "graph_local_clustering", "graph_pagerank", "graph_triangle_count",
-    "incremental_agg_merge", "interleave_weighted_sources",
-    "interval_join_binned", "interval_overlap_join_binned", "join_anti",
-    "join_cross", "join_fact_fact", "join_full_outer",
-    "join_inner_broadcast", "join_left_outer", "join_salted_skew",
-    "join_self", "join_semi", "join_skew_preflight",
-    "lateral_topk_per_customer", "lm_bigram_perplexity_rank",
-    "mine_hard_negatives", "mixture_token_budget_plan",
-    "mixture_upsample_plan", "mm_audio_features", "mm_audio_quality",
-    "mm_frame_sample", "mm_image_ahash_dedup", "mm_image_features",
-    "mm_image_phash_dedup", "mm_image_resize", "mm_metadata_stats",
-    "mm_video_scene_cuts", "nb_classify_confusion", "nb_classwise_f1",
-    "nb_margin_calibration", "pack_documents_greedy",
-    "pipeline_clean_corpus", "pipeline_training_ready", "q10_returned_items",
-    "q11_important_parts", "q12_lateness_priority",
-    "q13_customer_distribution", "q14_promo_revenue", "q15_top_supplier",
-    "q16_supplier_count", "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q1_pricing_summary", "q20_excess_suppliers",
-    "q21_waiting_supplier", "q22_idle_customers", "q2_min_cost_supplier",
-    "q3_shipping_priority", "q4_order_priority", "q5_region_revenue",
-    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
-    "q9_product_profit", "range_join_sessions", "retention_weekly",
-    "sample_downweight_duplicates", "sample_exact_k_per_group",
-    "sample_stratified_per_lang", "sample_systematic_every_k",
-    "sample_temperature_mixing", "sample_weighted_reservoir",
-    "scalar_array_funcs", "scalar_bitwise", "scalar_conditional",
-    "scalar_date_funcs", "scalar_higher_order", "scalar_ip_funcs",
-    "scalar_json", "scalar_map_funcs", "scalar_math_funcs",
-    "scalar_null_semantics", "scalar_regex", "scalar_string_funcs",
-    "scalar_try_safety", "scalar_url_funcs", "scalar_variant_json",
-    "scd2_customer_merge", "search_bm25_topk", "search_hybrid_rrf",
-    "search_inverted_index", "search_phrase_match", "semantic_dedup_kept",
-    "sequence_match_regex", "sequence_pairs_click_purchase",
-    "sequence_transition_matrix", "sessionize_batch", "setop_except",
-    "setop_except_all", "setop_intersect", "setop_intersect_all",
-    "setop_symmetric_difference", "setop_union_all", "setop_union_distinct",
-    "sketch_approx_percentile", "sketch_countmin_heavy", "sketch_freq_items",
-    "sketch_hll_merge", "sketch_hll_registers", "sketch_theta_set_ops",
-    "sort_limit_topk", "split_train_test_hash", "sql_frontend_passthrough",
-    "sql_group_by_all", "sql_recursive_cte_spine", "stat_ab_power_mde",
-    "stat_anova_oneway", "stat_arrival_burstiness", "stat_benford_audit",
-    "stat_bootstrap_se", "stat_brown_forsythe", "stat_chi_square",
-    "stat_cohens_d_by_segment", "stat_corr_regression",
-    "stat_cuped_variance_reduction", "stat_diff_in_diff", "stat_entropy",
-    "stat_equidepth_histogram", "stat_gini_concentration",
-    "stat_histogram_fixed_bins", "stat_ks_two_sample", "stat_mann_whitney_u",
-    "stat_median_iqr", "stat_moments", "stat_mutual_information",
-    "stat_runs_test", "stat_spearman_corr", "stat_srm_check",
-    "stat_time_weighted_avg", "stat_trimmed_mean", "stat_weighted_median",
-    "stat_welch_ttest", "stat_winsorized_mean", "stat_zscore_outliers",
-    "stream_click_purchase_join", "stream_dedup_keys",
-    "stream_hourly_distinct_users", "stream_incremental_lsh_pairs",
-    "stream_session_window", "stream_sessionize_custom_state",
-    "stream_sliding_topk", "stream_static_enrichment",
-    "stream_tumbling_counts", "stream_user_value_state",
-    "stream_watermark_advisor", "subquery_correlated_scalar",
-    "subquery_exists_correlated", "subquery_in", "subquery_not_in",
-    "subquery_scalar", "text_boilerplate_ngrams", "text_chunk_chars",
-    "text_chunk_words", "text_collocations_pmi", "text_encoding_quality",
-    "text_fingerprint", "text_hapax_ratio", "text_langid",
-    "text_pii_redaction", "text_quality_scores", "text_rarity_score",
-    "text_readability_fk", "text_repetition_metrics", "text_sentence_stats",
-    "text_token_stats", "tfidf_top_terms", "tokenize_with_vocab",
-    "tokenizer_fertility_by_lang", "topk_heavy_hitters",
-    "ts_anomaly_seasonal_zscore", "ts_autocorrelation", "ts_bollinger_bands",
-    "ts_cusum_changepoint", "ts_ema_trailing", "ts_gap_percentiles",
-    "ts_hopping_window", "ts_interpolate_linear", "ts_ljung_box",
-    "ts_lttb_downsample", "ts_m4_downsample", "ts_minute_spine_gapfill",
-    "ts_ohlc_bars", "ts_paa_sax", "ts_rolling_mad_anomaly",
-    "ts_rollup_hour_from_minute", "ts_rollup_minute",
-    "ts_seasonal_naive_error", "ts_seasonality_strength",
-    "ts_session_window_builtin", "ts_trend_slope_by_type",
-    "ts_tumbling_window", "ts_vwap_bars", "ts_wow_growth",
-    "udaf_gmean_by_type", "udtf_token_counts", "vocab_build",
-    "window_cumulative_distinct_users", "window_first_last",
-    "window_ignore_nulls", "window_lag_lead", "window_moving_median",
-    "window_range_interval_frame", "window_rank_dense_ntile",
-    "window_rank_fractions", "window_rolling_corr", "window_running_sum",
-    "window_sliding_frame", "window_topn_per_group",
-}
-
-
-# r09 window adjudicated green (CORRECTNESS_r09: 50/50) — back-block now.
-_DRIVER_GREEN |= set(_ROUND9_FRONT)
-# r10 window adjudicated green (CORRECTNESS_r10: 50/50) — back-block now.
-_DRIVER_GREEN |= set(_ROUND10_FRONT)
-# r11 window adjudicated green (CORRECTNESS_r11: 50/50) — back-block now.
-_DRIVER_GREEN |= set(_ROUND11_FRONT)
-
-
-def _rotate() -> None:
-    front = [n for n in _ROUND12_FRONT if n in QUERIES]
-    in_front = set(front)
-    assert len(in_front) == len(front), "duplicate name in rotation lists"
-    # New queries (registered but in neither explicit list nor the green
-    # set) queue after the changed block, before the green back.
-    mid = [n for n in QUERIES if n not in in_front and n not in _DRIVER_GREEN]
-    back = [n for n in QUERIES if n in _DRIVER_GREEN and n not in in_front]
-    order = front + mid + back
-    assert len(order) == len(QUERIES)
-    for d in (QUERIES, ORACLES):
-        reordered = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(reordered)
-
-
-_rotate()
+rotation.reorder(
+    rotation.rotation_order(
+        list(QUERIES), rotation.read_verdicts(), rotation.read_fingerprints()
+    ),
+    QUERIES,
+    ORACLES,
+)

@@ -13,6 +13,12 @@ of `_edge_set_diff(e_new, e)` on two. Pins here:
   byte-identical components to a reference loop using the old
   generation-diff check, in exactly one FEWER round (the old loop's
   final confirming round is never built).
+
+The label loop's check `_changed_nodes` and the two-generation
+`_edge_set_diff` are pinned the same way: empty iff converged (including
+labels swapped between nodes, which a bag-level checksum would miss),
+and one Exchange each. A repeat run of a star-loop query compiles no
+generated class.
 """
 
 from __future__ import annotations
@@ -20,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from chainhouse_spark.operators.components import (
+    _changed_nodes,
     _edge_set_diff,
     _non_star_nodes,
     canonicalize,
@@ -218,3 +225,71 @@ def test_star_loop_converged_input_single_round(spark):
     )
     got = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
     assert got == {5: 1, 3: 1, 9: 1, 1: 1}
+
+
+def _labels(spark, rows):
+    return spark.createDataFrame(rows, "node long, label long")
+
+
+def test_changed_nodes_semantics(spark):
+    old = _labels(spark, [(1, 1), (2, 1), (3, 3)])
+    # identical generations -> empty (the early-exit case)
+    assert _changed_nodes(_labels(spark, [(1, 1), (2, 1), (3, 3)]), old).count() == 0
+    # one relabel -> exactly that node
+    got = _changed_nodes(_labels(spark, [(1, 1), (2, 1), (3, 1)]), old)
+    assert [r.node for r in got.collect()] == [3]
+    # labels SWAPPED between nodes: the label multiset is unchanged, so a
+    # bag checksum would read "converged" — the per-node min/max must not
+    swapped = _labels(spark, [(1, 3), (2, 1), (3, 1)])
+    assert _changed_nodes(swapped, old).count() == 2
+
+
+def test_edge_set_diff_semantics(spark):
+    e = spark.createDataFrame([(5, 3), (7, 2)], "u long, v long")
+    same = spark.createDataFrame([(7, 2), (5, 3)], "u long, v long")
+    assert _edge_set_diff(same, e).count() == 0  # order-free set equality
+    # one edge replaced -> both the vanished and the new edge surface
+    moved = spark.createDataFrame([(5, 3), (7, 4)], "u long, v long")
+    diff = {(r.u, r.v) for r in _edge_set_diff(moved, e).collect()}
+    assert diff == {(7, 2), (7, 4)}
+    # strict subset (e_new shrank) must read non-empty too
+    assert _edge_set_diff(e.limit(1), e).count() > 0
+
+
+def test_convergence_check_is_one_exchange(spark):
+    a = _labels(spark, [(1, 1), (2, 1)])
+    b = _labels(spark, [(1, 1), (2, 2)])
+    # formatted plans print each node twice (tree line + detail header)
+    plan = _formatted(_changed_nodes(a, b))
+    assert plan.count("Exchange") == 2, plan
+    e = spark.createDataFrame([(5, 3)], "u long, v long")
+    f = spark.createDataFrame([(5, 4)], "u long, v long")
+    plan = _formatted(_edge_set_diff(e, f))
+    assert plan.count("Exchange") == 2, plan
+    assert "Join" not in plan, plan
+
+
+def test_loops_with_adversarial_edges(spark):
+    # Duplicate, reversed and self-loop edges must still converge to the
+    # right clustering (dupes collapse at the seed distinct; the count==1
+    # trick relies on per-half-step .distinct() which this exercises).
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (2, 2), (4, 3), (3, 4)],
+        "src long, dst long",
+    )
+    star = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
+    prop = {r.node: r.cluster_id for r in connected_components(edges).collect()}
+    assert star == prop == {1: 1, 2: 1, 3: 3, 4: 3}
+
+
+def test_repeat_run_compiles_no_class(spark, sf_dir):
+    # The convergence checks compile once: a repeat run of a star-loop
+    # query finds every generated class in the codegen cache.
+    from chainhouse_spark.queries import QUERIES
+    from chainhouse_spark.session import codegen_compiles
+
+    query = QUERIES["dedup_clusters_star"]
+    query(spark, sf_dir).collect()
+    before, _ = codegen_compiles(spark)
+    query(spark, sf_dir).collect()
+    assert codegen_compiles(spark)[0] - before == 0
