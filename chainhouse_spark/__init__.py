@@ -7,7 +7,7 @@ Layout:
     schemas      — the four ethereum table StructTypes + raw RPC nested schema
     transforms   — raw nested blocks -> four flat tables (the ETL dataflow core)
     sources      — fixture/JSON-RPC block sources (HTTP + stdlib WebSocket)
-    sinks        — parquet sink, ClickHouse DDL + RowBinary/JDBC inserts, exact dedup
+    sinks        — parquet sink, ClickHouse DDL + native TCP inserts, exact dedup
     functions    — hex/binary, text-analysis, vector column helpers
     operators    — dedup (exact/minhash/simhash/jaccard), similarity, asof/range join
     queries      — the analytic query registry (drives __spark_entry__.py)

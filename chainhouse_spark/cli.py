@@ -1,13 +1,16 @@
 """CLI — argv-compatible with the reference (SURVEY.md §2.1 S1):
 
     chainhouse-spark --ethereum <rpc-url> --from F --to T
-                     [--clickhouse host:port] [--schema]
+                     [--clickhouse host[:port]] [--schema]
                      [--output /path/parquet] [--batch 1000]
     chainhouse-spark --warehouse /path --sql "SELECT ..."   # post-ingest SQL
 
 Differences from the reference, all deliberate (SURVEY §7):
 - --clickhouse is HONORED (the reference parses and ignores it,
-  src/main.rs:20-21 vs :46).
+  src/main.rs:20-21 vs :46): host[:port] of the ClickHouse native TCP
+  endpoint, port 9000 by default as in the reference. The ETL provisions
+  the database and the four tables there, then bulk-inserts columnar
+  Native blocks (sinks/native_tcp.py).
 - --schema prints/provisions DDL derived from the StructTypes.
 - --output selects the parquet-native sink (default) instead of ClickHouse.
 - --batch slices the range into atomic, idempotently re-runnable writes
@@ -22,29 +25,33 @@ import argparse
 from chainhouse_spark.session import build_spark
 from chainhouse_spark.sinks import clickhouse as ch
 from chainhouse_spark.sinks import write_concurrently
+from chainhouse_spark.sinks.native_tcp import provision_native_tcp, write_native_tcp
 from chainhouse_spark.sinks.parquet import write_all
 from chainhouse_spark.sources.rpc import raw_blocks_from_rpc
 from chainhouse_spark.transforms import all_tables_from_raw
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="chainhouse-spark")
     p.add_argument("--ethereum", help="Ethereum JSON-RPC endpoint URL")
-    p.add_argument("--clickhouse", help="ClickHouse endpoint host:port")
     p.add_argument(
-        "--ch-protocol",
-        choices=["rowbinary", "native", "jdbc"],
-        default="rowbinary",
-        help="ClickHouse insert path: RowBinary over HTTP (default, K6 "
-        "parity), native TCP protocol on port 9000 (the reference's wire, "
-        "provisions tables first), or generic JDBC",
+        "--clickhouse",
+        help="ClickHouse native TCP endpoint host[:port] (port 9000 by "
+        "default, as in the reference); provisioned, then loaded",
     )
     p.add_argument("--from", dest="from_block", type=int, help="first block (inclusive)")
     p.add_argument("--to", dest="to_block", type=int, help="last block (inclusive)")
     p.add_argument("--schema", action="store_true", help="provision/print DDL")
     p.add_argument("--output", help="parquet sink base path (default sink)")
-    p.add_argument("--batch", type=int, default=1000, help="blocks per write slice")
-    p.add_argument("--parallelism", type=int, default=32, help="fetch partitions")
+    p.add_argument("--batch", type=_positive_int, default=1000, help="blocks per write slice")
+    p.add_argument("--parallelism", type=_positive_int, default=32, help="fetch partitions")
     p.add_argument("--list-queries", action="store_true", help="list registered analytics queries")
     p.add_argument("--query", help="run a registered analytics query by name")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.01", help="table dir for --query")
@@ -93,15 +100,11 @@ def _stop_if_owned(spark) -> None:
 
 
 def _cli_spark(app_name: str):
-    from pyspark.sql import SparkSession
+    from pyspark import SparkContext
 
-    # getActiveSession is thread-local; a session created on another thread
-    # (or with cleared active state) is only visible via getDefaultSession.
-    # Checking both keeps us from stopping a SparkContext we merely joined.
-    existed = (
-        SparkSession.getActiveSession() is not None
-        or SparkSession.getDefaultSession() is not None
-    )
+    # A live SparkContext, whichever thread created it, is joined by
+    # getOrCreate; only a context this call starts is ours to stop.
+    existed = SparkContext._active_spark_context is not None
     spark = build_spark(app_name=app_name)
     spark._chainhouse_cli_owned = not existed
     return spark
@@ -212,14 +215,12 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit("--ethereum endpoint required for extraction")
     if not args.output and not args.clickhouse:
         raise SystemExit(
-            "pick a sink: --output (parquet) or --clickhouse (RowBinary/native/JDBC)"
+            "pick a sink: --output (parquet) or --clickhouse (native TCP)"
         )
 
-    spark = _cli_spark("chainhouse-etl")
-    if args.clickhouse and args.ch_protocol == "native" and not args.output:
-        from chainhouse_spark.sinks.native_tcp import provision_native_tcp
-
+    if not args.output:
         provision_native_tcp(args.clickhouse)
+    spark = _cli_spark("chainhouse-etl")
     lo = args.from_block
     while lo <= args.to_block:
         hi = min(lo + args.batch - 1, args.to_block)
@@ -229,21 +230,9 @@ def main(argv: list[str] | None = None) -> int:
         tables = all_tables_from_raw(raw)
         if args.output:
             write_all(tables, args.output, mode="append")
-        elif args.ch_protocol == "rowbinary":
-            from chainhouse_spark.sinks.rowbinary import write_rowbinary_http
-
-            write_concurrently(
-                tables, lambda df, name: write_rowbinary_http(df, name, args.clickhouse)
-            )
-        elif args.ch_protocol == "native":
-            from chainhouse_spark.sinks.native_tcp import write_native_tcp
-
-            write_concurrently(
-                tables, lambda df, name: write_native_tcp(df, name, args.clickhouse)
-            )
         else:
             write_concurrently(
-                tables, lambda df, name: ch.write_jdbc(df, name, args.clickhouse)
+                tables, lambda df, name: write_native_tcp(df, name, args.clickhouse)
             )
         print(f"wrote blocks [{lo}, {hi}]")
         lo = hi + 1

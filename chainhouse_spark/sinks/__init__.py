@@ -1,4 +1,5 @@
-"""Sinks: parquet-native at-rest layout and the ClickHouse DDL/JDBC path."""
+"""Sinks: parquet-native at-rest layout, and ClickHouse DDL plus its native
+TCP load path."""
 
 from __future__ import annotations
 

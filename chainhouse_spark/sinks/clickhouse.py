@@ -1,6 +1,6 @@
-"""ClickHouse sink: DDL derived from the StructTypes (K1/K2) and a JDBC
-write path (K5/K6), import-gated since no JDBC driver ships in this
-environment.
+"""ClickHouse DDL derived from the StructTypes (K1/K2) and the
+Spark -> ClickHouse type map (`_ch_type`, `column_type`) that the native
+TCP sink (sinks/native_tcp.py) also types its column blocks with.
 
 The DDL reproduces the reference's provisioning (src/main.rs:52-161) —
 same engines, same ORDER BY keys, same column spellings — but derived from
@@ -11,8 +11,6 @@ and honoring the endpoint argument the reference ignores (it hardcodes
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -21,6 +19,7 @@ from pyspark.sql.types import (
     DecimalType,
     LongType,
     StringType,
+    StructField,
     StructType,
 )
 
@@ -41,17 +40,13 @@ FIXED_WIDTHS: dict[str, int] = {
     "nonce": 8,  # block nonce; tx nonce is Decimal so never hits this map
 }
 
-# Columns the reference stores as plain String despite being bytes
-# (logsBloom, extraData, input, data — src/main.rs:82,84,107,138).
-_NON_NULLABLE_SENTINEL = object()
-
 
 def _ch_type(name: str, dtype: DataType) -> str:
     if isinstance(dtype, BinaryType):
-        if name in FIXED_WIDTHS and name != "nonce":
+        if name in FIXED_WIDTHS:
             return f"FixedString({FIXED_WIDTHS[name]})"
-        if name == "nonce":
-            return "FixedString(8)"
+        # The reference stores the other byte columns as plain String
+        # (logsBloom, extraData, input, data — src/main.rs:82,84,107,138).
         return "String"
     if isinstance(dtype, DecimalType):
         return "UInt256"
@@ -66,6 +61,18 @@ def _ch_type(name: str, dtype: DataType) -> str:
     raise ValueError(f"no ClickHouse mapping for {name}: {dtype}")
 
 
+def column_type(field: StructField, order_by: list[str]) -> str:
+    """ClickHouse type of one provisioned column, as the DDL declares it and
+    the native sink sends it: Nullable iff nullable in the schema, not a
+    key column (ORDER BY keys stay non-null), and not an Array (ClickHouse
+    cannot wrap Array in Nullable; a NULL array is sent as [])."""
+    t = _ch_type(field.name, field.dataType)
+    nullable = (
+        field.nullable and field.name not in order_by and not t.startswith("Array(")
+    )
+    return f"Nullable({t})" if nullable else t
+
+
 def table_ddl(
     name: str,
     schema: StructType | None = None,
@@ -77,13 +84,9 @@ def table_ddl(
     the four ethereum tables with its reference ORDER BY key)."""
     schema = schema if schema is not None else TABLES[name]
     order_by = order_by if order_by is not None else DEDUP_KEYS[name]
-    cols = []
-    for f in schema.fields:
-        t = _ch_type(f.name, f.dataType)
-        # ClickHouse can't wrap Array in Nullable; key columns stay non-null.
-        nullable = f.nullable and f.name not in order_by and not t.startswith("Array")
-        cols.append(f"    `{f.name}` {'Nullable(' + t + ')' if nullable else t}")
-    cols_sql = ",\n".join(cols)
+    cols_sql = ",\n".join(
+        f"    `{f.name}` {column_type(f, order_by)}" for f in schema.fields
+    )
     key = ", ".join(f"`{k}`" for k in order_by)
     return (
         f"CREATE TABLE IF NOT EXISTS {database}.{name}\n(\n{cols_sql}\n)\n"
@@ -98,65 +101,3 @@ def database_ddl(database: str = "ethereum") -> str:
 def all_ddl(database: str = "ethereum") -> list[str]:
     """The reference's five provisioning statements (src/main.rs:53-161)."""
     return [database_ddl(database)] + [table_ddl(n, database=database) for n in TABLES]
-
-
-def jdbc_projection(df: DataFrame) -> DataFrame:
-    """JDBC-portable view of a chain table: the JDBC wire (and Spark's JDBC
-    writer) has no Array type and most targets cap DECIMAL below 38 digits,
-    so arrays serialize as JSON strings (binary elements -> base64, Spark's
-    to_json encoding) and u256 decimals as digit strings. ClickHouse coerces
-    digit strings into the UInt256 columns the DDL provisions; array columns
-    land in String staging and are materialized server-side
-    (JSONExtract(...)). Binary/long/bool/string columns pass through — the
-    round-trip test pins value fidelity for every column class."""
-    cols = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, ArrayType):
-            cols.append(F.to_json(F.col(f.name)).alias(f.name))
-        elif isinstance(f.dataType, DecimalType) and f.dataType.precision > 31:
-            cols.append(F.col(f.name).cast("string").alias(f.name))
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
-
-
-def write_jdbc(
-    df: DataFrame,
-    name: str,
-    endpoint: str,
-    database: str = "ethereum",
-    batch_size: int = 100_000,
-    url: str | None = None,
-    driver: str | None = "com.clickhouse.jdbc.ClickHouseDriver",
-) -> None:
-    """JDBC bulk insert (the K6 native-format insert's Spark equivalent,
-    src/main.rs:292-319): each partition opens one connection and writes
-    `batch_size`-row prepared-statement batches — K4's flush batching,
-    executor-side and table-parallel like the reference's try_join!.
-
-    Defaults target ClickHouse; `url`/`driver` are pluggable so the write
-    path itself is executable against any JDBC database (the round-trip
-    test in tests/test_sources_sinks.py drives it with Spark's bundled
-    embedded Derby — no ClickHouse server ships in this environment).
-    Raises a clear error when the target driver is absent."""
-    url = url or f"jdbc:clickhouse://{endpoint}/{database}"
-    try:
-        w = (
-            jdbc_projection(df)
-            .write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", name if url.startswith("jdbc:derby") else f"{database}.{name}")
-            .option("batchsize", str(batch_size))
-            .mode("append")
-        )
-        if driver:
-            w = w.option("driver", driver)
-        w.save()
-    except Exception as e:  # driver missing in this container
-        if "ClassNotFoundException" in str(e) or "No suitable driver" in str(e):
-            raise RuntimeError(
-                "JDBC driver unavailable for "
-                f"{url!r}; provision it on the cluster classpath "
-                "(com.clickhouse:clickhouse-jdbc for the default target)"
-            ) from e
-        raise

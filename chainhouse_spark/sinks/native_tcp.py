@@ -1,12 +1,11 @@
 """ClickHouse native TCP protocol (port 9000) — hello/query/data framing and
-columnar Native-format blocks, stdlib-socket only.
+columnar Native-format blocks, stdlib-socket only. This is the project's
+one ClickHouse load path.
 
 The reference connects to `127.0.0.1:9000` over the native protocol
 (src/main.rs:46) and bulk-inserts `FORMAT native` column blocks
-(src/main.rs:294-309). The repo's other two sinks cover the HTTP interface
-(sinks/rowbinary.py, byte-exact RowBinary) and generic JDBC
-(sinks/clickhouse.py); this module closes the native-TCP-only deployment
-gap with a from-scratch implementation of the documented wire protocol:
+(src/main.rs:294-309); this module is a from-scratch implementation of
+that documented wire protocol:
 
   client  Hello(0) -> server Hello(0)         version/revision negotiation
   client  Query(1) + empty Data(2) block      (external-tables terminator)
@@ -29,33 +28,23 @@ Native columnar encodings (per-column, whole column consecutively):
 
 Tests pin golden packet bytes and round-trip blocks through a scripted
 fake server (tests/test_native_tcp.py); a live-server smoke is env-gated
-behind CHAINHOUSE_CLICKHOUSE_TCP. Executor-side dataflow matches the other
-sinks: `foreachPartition`, `batch_size`-row blocks, at-least-once retries
-made idempotent by the ReplacingMergeTree keys (K8).
+behind CHAINHOUSE_CLICKHOUSE_TCP. Executor-side dataflow: `foreachPartition`,
+`batch_size`-row blocks, at-least-once retries made idempotent by the
+ReplacingMergeTree keys (K8).
 """
 
 from __future__ import annotations
 
+import re
 import socket
 import struct
-from decimal import Decimal
 from typing import Any, BinaryIO, Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    DataType,
-    DecimalType,
-    LongType,
-    StringType,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
 from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
-from chainhouse_spark.sinks.clickhouse import FIXED_WIDTHS, _ch_type
-from chainhouse_spark.sinks.rowbinary import varint
+from chainhouse_spark.sinks.clickhouse import all_ddl, column_type
 
 CLIENT_NAME = "chainhouse-spark"
 CLIENT_VERSION = (1, 0, 0)
@@ -95,6 +84,21 @@ class ClickHouseError(RuntimeError):
 
 # ---------------------------------------------------------------------------
 # primitive read/write
+
+
+def varint(n: int) -> bytes:
+    """Unsigned LEB128 (the protocol's length and packet-id prefix)."""
+    if n < 0:
+        raise ValueError(f"varint of negative {n}")
+    out = bytearray()
+    while True:
+        b = n & 0x7F
+        n >>= 7
+        if n:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
 
 
 def write_varint_str(s: str | bytes) -> bytes:
@@ -140,7 +144,7 @@ def _col_u64(vals: list[Any]) -> bytes:
 def _col_u256(vals: list[Any]) -> bytes:
     out = bytearray()
     for v in vals:
-        i = int(v) if not isinstance(v, Decimal) else int(v)
+        i = int(v)
         if i < 0 or i >= 1 << 256:
             raise ValueError(f"u256 out of range: {i}")
         out += i.to_bytes(32, "little")
@@ -172,35 +176,30 @@ def _col_fixed(width: int) -> Callable[[list[Any]], bytes]:
     return enc
 
 
-_NULL_DEFAULT: dict[str, Any] = {
-    "UInt64": 0,
-    "UInt256": 0,
-    "Boolean": False,
-    "String": b"",
+# Scalar ClickHouse type -> (whole-column encoder, value written under a
+# NULL-mask 1).
+_SCALAR_ENCODERS: dict[str, tuple[Callable[[list[Any]], bytes], Any]] = {
+    "UInt64": (_col_u64, 0),
+    "UInt256": (_col_u256, 0),
+    "Boolean": (_col_bool, False),
+    "String": (_col_string, b""),
 }
 
 
-def _column_encoder(name: str, dtype: DataType) -> tuple[str, Callable[[list[Any]], bytes], Any]:
-    """(type string, whole-column encoder, NULL default) for one column.
+def _column_encoder(ch: str) -> tuple[Callable[[list[Any]], bytes], Any]:
+    """(whole-column encoder, NULL default) for a ClickHouse type string.
+    Types come from sinks/clickhouse.column_type, so the DDL and the Native
+    blocks agree on every column."""
+    if ch.startswith("Nullable("):
+        inner, null_default = _column_encoder(ch[len("Nullable(") : -1])
 
-    Type strings mirror sinks/clickhouse._ch_type so DDL, RowBinary, and
-    Native blocks agree on every column."""
-    ch = _ch_type(name, dtype)
-    if isinstance(dtype, BinaryType):
-        if name in FIXED_WIDTHS:
-            width = 8 if name == "nonce" else FIXED_WIDTHS[name]
-            return ch, _col_fixed(width), b"\x00" * width
-        return ch, _col_string, b""
-    if isinstance(dtype, DecimalType):
-        return ch, _col_u256, 0
-    if isinstance(dtype, LongType):
-        return ch, _col_u64, 0
-    if isinstance(dtype, BooleanType):
-        return ch, _col_bool, False
-    if isinstance(dtype, StringType):
-        return ch, _col_string, b""
-    if isinstance(dtype, ArrayType):
-        _, elem_enc, _ = _column_encoder(name, dtype.elementType)
+        def enc_nullable(vals: list[Any]) -> bytes:
+            mask = bytes(1 if v is None else 0 for v in vals)
+            return mask + inner([null_default if v is None else v for v in vals])
+
+        return enc_nullable, None
+    if ch.startswith("Array("):
+        elem_enc, _ = _column_encoder(ch[len("Array(") : -1])
 
         def enc_array(vals: list[Any]) -> bytes:
             offsets = bytearray()
@@ -213,16 +212,18 @@ def _column_encoder(name: str, dtype: DataType) -> tuple[str, Callable[[list[Any
                 flat.extend(items)
             return bytes(offsets) + elem_enc(flat)
 
-        return ch, enc_array, []
-    raise ValueError(f"no Native encoding for {name}: {dtype}")
+        return enc_array, []
+    if ch.startswith("FixedString("):
+        width = int(ch[len("FixedString(") : -1])
+        return _col_fixed(width), b"\x00" * width
+    return _SCALAR_ENCODERS[ch]
 
 
 def encode_block(
     schema: StructType, rows: list[Any], order_by: list[str] | None = None
 ) -> bytes:
     """One Native block: BlockInfo + n_cols + n_rows + per-column
-    name/type/data. Nullability matches table_ddl: nullable iff nullable in
-    the schema, not a key column, and not an Array."""
+    name/type/data, each column typed as the DDL provisions it."""
     order_by = order_by or []
     out = bytearray()
     # BlockInfo: field 1 = is_overflows (u8), field 2 = bucket_num (i32),
@@ -230,25 +231,12 @@ def encode_block(
     out += varint(1) + b"\x00" + varint(2) + struct.pack("<i", -1) + varint(0)
     out += varint(len(schema.fields)) + varint(len(rows))
     for field in schema.fields:
-        ch, enc, null_default = _column_encoder(field.name, field.dataType)
-        is_array = isinstance(field.dataType, ArrayType)
-        nullable = field.nullable and field.name not in order_by and not is_array
+        ch = column_type(field, order_by)
         vals = [row[field.name] for row in rows]
-        out += write_varint_str(field.name)
-        if nullable:
-            out += write_varint_str(f"Nullable({ch})")
-            out += bytes(1 if v is None else 0 for v in vals)
-            vals = [null_default if v is None else v for v in vals]
-        else:
-            out += write_varint_str(ch)
-            fixed = [
-                [] if v is None and is_array else v for v in vals
-            ]  # Array can't be Nullable in ClickHouse: NULL -> []
-            for v in fixed:
-                if v is None:
-                    raise ValueError(f"NULL in non-nullable column {field.name}")
-            vals = fixed
-        out += enc(vals)
+        if not ch.startswith(("Nullable(", "Array(")) and any(v is None for v in vals):
+            raise ValueError(f"NULL in non-nullable column {field.name}")
+        enc, _ = _column_encoder(ch)
+        out += write_varint_str(field.name) + write_varint_str(ch) + enc(vals)
     return bytes(out)
 
 
@@ -553,6 +541,21 @@ class NativeTCPClient:
 # Spark sink
 
 
+def parse_endpoint(endpoint: str) -> tuple[str, int]:
+    """`host[:port]` of a native-protocol endpoint -> (host, port). The port
+    defaults to 9000, as in the reference (src/main.rs:46). Raises
+    ValueError naming the endpoint, so callers can check it on the driver
+    before any Spark job starts."""
+    m = re.fullmatch(r"([^:/\s]+)(?::([0-9]{1,5}))?", endpoint)
+    port = int(m[2] or 9000) if m else 0
+    if not 0 < port < 65536:
+        raise ValueError(
+            f"ClickHouse endpoint {endpoint!r} is not host[:port] of the "
+            "native TCP interface (e.g. 127.0.0.1:9000)"
+        )
+    return m[1], port
+
+
 def write_native_tcp(
     df: DataFrame,
     name: str,
@@ -566,11 +569,10 @@ def write_native_tcp(
     """Executor-side native-TCP bulk insert: one connection per partition,
     `batch_size`-row columnar blocks (K4 flush batching; partitions are the
     K5 parallelism). At-least-once per block; the ReplacingMergeTree keys
-    (K8) make re-runs idempotent — same contract as the reference and the
-    RowBinary/JDBC sinks."""
+    (K8) make re-runs idempotent — same contract as the reference."""
     schema = df.schema
     keys = DEDUP_KEYS.get(name, [])
-    host, _, port = endpoint.partition(":")
+    host, port = parse_endpoint(endpoint)
 
     def send_partition(rows) -> None:
         buf: list[Any] = []
@@ -583,7 +585,7 @@ def write_native_tcp(
             if client is None:
                 client = NativeTCPClient(
                     host,
-                    int(port or 9000),
+                    port,
                     database=database,
                     user=user,
                     password=password,
@@ -592,13 +594,15 @@ def write_native_tcp(
             client.insert(name, schema, buf, order_by=keys, batch_size=batch_size)
             buf.clear()
 
-        for row in rows:
-            buf.append(row)
-            if len(buf) >= batch_size:
-                flush()
-        flush()
-        if client is not None:
-            client.close()
+        try:
+            for row in rows:
+                buf.append(row)
+                if len(buf) >= batch_size:
+                    flush()
+            flush()
+        finally:
+            if client is not None:
+                client.close()
 
     df.foreachPartition(send_partition)
 
@@ -611,11 +615,9 @@ def provision_native_tcp(
 ) -> None:
     """Create the database + four chain tables over native TCP (the
     reference's five provisioning statements, src/main.rs:53-161)."""
-    from chainhouse_spark.sinks.clickhouse import all_ddl
-
-    host, _, port = endpoint.partition(":")
+    host, port = parse_endpoint(endpoint)
     client = NativeTCPClient(
-        host, int(port or 9000), database="default", user=user, password=password
+        host, port, database="default", user=user, password=password
     )
     try:
         for ddl in all_ddl(database):
@@ -629,6 +631,7 @@ __all__ = [
     "NativeTCPClient",
     "encode_block",
     "read_block",
+    "parse_endpoint",
     "write_native_tcp",
     "provision_native_tcp",
     "TABLES",

@@ -45,7 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from chainhouse_spark.sinks.native_tcp import NativeTCPClient
+from chainhouse_spark.sinks.native_tcp import NativeTCPClient, parse_endpoint
 
 _U63 = 1 << 63
 
@@ -125,8 +125,7 @@ def read_native_tcp(
     subquery — for ClickHouse-side pruning, pass a range-bounded query per
     the usual JDBC practice.
     """
-    host, _, port_s = endpoint.partition(":")
-    port = int(port_s or 9000)
+    host, port = parse_endpoint(endpoint)
 
     probe = NativeTCPClient(
         host, port, database=database, user=user, password=password, timeout=timeout

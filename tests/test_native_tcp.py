@@ -1,10 +1,10 @@
 """ClickHouse native TCP protocol: golden packet bytes, block round-trips,
 and a scripted fake-server insert exercising the full client state machine.
 
-The fake server implements the server half of the documented handshake
-(Hello / sample-block / Progress / EndOfStream) over a real socket, so the
-client's framing, revision negotiation, and insert loop run end-to-end
-without a ClickHouse install. A live-server smoke is env-gated behind
+The fake server (tests/fake_clickhouse.py) implements the server half of
+the documented handshake over a real socket, so the client's framing,
+revision negotiation, and insert loop run end-to-end without a ClickHouse
+install. A live-server smoke is env-gated behind
 CHAINHOUSE_CLICKHOUSE_TCP=host:port.
 """
 
@@ -12,9 +12,7 @@ from __future__ import annotations
 
 import io
 import os
-import socket
 import struct
-import threading
 
 import pytest
 from pyspark.sql.types import (
@@ -31,12 +29,13 @@ from chainhouse_spark.sinks.native_tcp import (
     ClickHouseError,
     NativeTCPClient,
     encode_block,
+    parse_endpoint,
     read_block,
-    read_str,
-    read_varint,
+    varint,
+    write_native_tcp,
     write_varint_str,
 )
-from chainhouse_spark.sinks.rowbinary import varint
+from tests.fake_clickhouse import FakeServer
 
 # ---------------------------------------------------------------------------
 # block encoding
@@ -110,165 +109,60 @@ def test_array_offsets_are_cumulative():
     assert offs == (2).to_bytes(8, "little") + (3).to_bytes(8, "little")
 
 
-# ---------------------------------------------------------------------------
-# fake server
+def test_varint_boundaries():
+    assert varint(0) == b"\x00"
+    assert varint(127) == b"\x7f"
+    assert varint(128) == b"\x80\x01"
+    assert varint(300) == b"\xac\x02"
+    assert varint(1 << 21) == b"\x80\x80\x80\x01"
 
 
-class FakeServer:
-    """Scripted server half of the native protocol, enough for hello +
-    one DDL and/or one INSERT. Records everything the client sent."""
+def test_block_roundtrip_all_four_tables(spark):
+    """Every row and column of the fixture pipeline's four tables survives
+    encode_block -> read_block (u256 decimals, fixed widths, arrays,
+    era-dependent NULLs), under the column types the DDL provisions."""
+    from decimal import Decimal
 
-    def __init__(
-        self, revision: int = 54460, fail_queries: bool = False, select_handler=None
-    ):
-        self.revision = revision
-        self.fail_queries = fail_queries
-        # select_handler(query) -> (StructType, rows) | None; when set,
-        # non-INSERT queries answer with a header block + one data block.
-        self.select_handler = select_handler
-        self.received_blocks: list = []
-        self.queries: list[str] = []
-        self.errors: list[str] = []
-        self._sock = socket.socket()
-        self._sock.bind(("127.0.0.1", 0))
-        self._sock.listen(8)
-        self.port = self._sock.getsockname()[1]
-        self._thread = threading.Thread(target=self._serve, daemon=True)
-        self._thread.start()
+    from chainhouse_spark.queries.ethereum import _tables
+    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
+    from chainhouse_spark.sinks.clickhouse import table_ddl
 
-    def _serve(self) -> None:
-        while True:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:  # listener closed
-                return
-            threading.Thread(
-                target=self._serve_conn, args=(conn,), daemon=True
-            ).start()
-
-    def _serve_conn(self, conn) -> None:
-        try:
-            f = conn.makefile("rwb")
-            self._handshake(f)
-            while True:
-                try:
-                    packet = read_varint(f)
-                except (ConnectionError, OSError):
-                    return
-                if packet == 1:  # Query
-                    self._handle_query(f)
+    checked = nulls = null_arrays = 0
+    for name, df in _tables(spark).items():
+        rows = [r.asDict() for r in df.collect()]
+        if any(isinstance(v, list) for v in rows[0].values()):
+            # The fixture has no NULL arrays: add a row with every array
+            # column NULL, which goes on the wire as [].
+            rows.append({k: None if isinstance(v, list) else v for k, v in rows[0].items()})
+        block = encode_block(TABLES[name], rows, order_by=DEDUP_KEYS[name])
+        cols, data = read_block(io.BytesIO(block))
+        ddl_cols = [
+            line.strip().rstrip(",")
+            for line in table_ddl(name).splitlines()
+            if line.startswith("    `")
+        ]
+        assert [f"`{c}` {t}" for c, t in cols] == ddl_cols, name
+        for i, row in enumerate(rows):
+            for (col, ch), values in zip(cols, data):
+                v, got = row[col], values[i]
+                if v is None and ch.startswith("Array("):
+                    assert got == [], (name, col)  # Array NULL -> [] on the wire
+                    null_arrays += 1
+                elif v is None:
+                    assert got is None, (name, col)
+                    nulls += 1
+                elif isinstance(v, Decimal):
+                    assert Decimal(got) == v, (name, col)
+                elif isinstance(v, str):
+                    assert got == v.encode(), (name, col)
+                elif isinstance(v, list):
+                    assert got == [
+                        bytes(x) if isinstance(x, bytearray) else x for x in v
+                    ], (name, col)
                 else:
-                    self.errors.append(f"unexpected client packet {packet}")
-                    return
-        except Exception as exc:  # surfaced via self.errors in asserts
-            self.errors.append(repr(exc))
-
-    def _handshake(self, f) -> None:
-        assert read_varint(f) == 0  # client Hello
-        read_str(f)  # client name
-        read_varint(f)
-        read_varint(f)
-        client_rev = read_varint(f)
-        read_str(f)  # database
-        read_str(f)  # user
-        read_str(f)  # password
-        rev = min(client_rev, self.revision)
-        out = bytearray(varint(0))
-        out += write_varint_str("FakeHouse")
-        out += varint(21) + varint(8)
-        out += varint(self.revision)
-        if rev >= 54058:
-            out += write_varint_str("UTC")
-        if rev >= 54372:
-            out += write_varint_str("fakehouse")
-        if rev >= 54401:
-            out += varint(3)
-        f.write(out)
-        f.flush()
-
-    def _read_client_data_packet(self, f):
-        assert read_varint(f) == 2  # client Data
-        read_str(f)  # temp table name
-        return read_block(f)
-
-    def _handle_query(self, f) -> None:
-        read_str(f)  # query id
-        # ClientInfo (client speaks min(CLIENT_REVISION, self.revision))
-        rev = min(CLIENT_REVISION, self.revision)
-        assert f.read(1) == b"\x01"  # query kind
-        read_str(f)
-        read_str(f)
-        read_str(f)  # initial user/query id/address
-        assert f.read(1) == b"\x01"  # interface TCP
-        read_str(f)
-        read_str(f)
-        read_str(f)  # os user, hostname, client name
-        read_varint(f)
-        read_varint(f)
-        read_varint(f)  # version, revision
-        if rev >= 54060:
-            read_str(f)  # quota key
-        if rev >= 54401:
-            read_varint(f)  # patch
-        assert read_str(f) == b""  # settings terminator
-        read_varint(f)  # stage
-        read_varint(f)  # compression
-        query = read_str(f).decode()
-        self.queries.append(query)
-        self._read_client_data_packet(f)  # external-tables terminator
-
-        if self.fail_queries:
-            exc = bytearray(varint(2))
-            exc += struct.pack("<i", 60)
-            exc += write_varint_str("DB::Exception")
-            exc += write_varint_str("Table does not exist")
-            exc += write_varint_str("")  # stack trace
-            exc += b"\x00"  # no nested exception
-            f.write(exc)
-            f.flush()
-            return
-
-        if query.lstrip().upper().startswith("INSERT"):
-            # sample block: empty, echoing no columns (structure not
-            # validated by the client beyond "a Data packet arrived")
-            out = bytearray(varint(1)) + write_varint_str("")
-            out += encode_block(StructType([]), [])
-            f.write(out)
-            f.flush()
-            while True:
-                cols, data = self._read_client_data_packet(f)
-                n_rows = len(data[0]) if data else 0
-                if n_rows == 0:
-                    break
-                self.received_blocks.append((cols, data))
-            # Progress + EndOfStream
-            prog = bytearray(varint(3))
-            rev = min(CLIENT_REVISION, self.revision)
-            prog += varint(0) + varint(0)
-            if rev >= 51554:
-                prog += varint(0)
-            if rev >= 54372:
-                prog += varint(sum(len(d[0]) for _, d in self.received_blocks))
-                prog += varint(0)
-            f.write(prog)
-            f.write(varint(5))
-            f.flush()
-        else:
-            handled = None
-            if self.select_handler is not None:
-                handled = self.select_handler(query)
-            if handled is not None:
-                schema, rows = handled
-                # header block (0 rows, full structure) then the data block
-                for chunk in ([], rows):
-                    out = bytearray(varint(1)) + write_varint_str("")
-                    out += encode_block(schema, chunk)
-                    f.write(out)
-            f.write(varint(5))  # EndOfStream
-            f.flush()
-
-    def close(self) -> None:
-        self._sock.close()
+                    assert got == (bytes(v) if isinstance(v, bytearray) else v), (name, col)
+                checked += 1
+    assert checked > 1000 and nulls > 0 and null_arrays == 2
 
 
 def test_fake_server_ddl_and_insert():
@@ -286,7 +180,8 @@ def test_fake_server_ddl_and_insert():
         "INSERT INTO ethereum.blocks (`number`, `miner`, `flags`, `ok`) VALUES"
     )
     assert len(srv.received_blocks) == 1
-    cols, data = srv.received_blocks[0]
+    query, cols, data = srv.received_blocks[0]
+    assert query == srv.queries[1]
     assert [c for c, _ in cols] == ["number", "miner", "flags", "ok"]
     assert data[0] == [1, 2]
     assert data[1] == [b"alice", None]
@@ -340,8 +235,6 @@ def test_chain_table_block_u256_and_fixedstring():
 def test_spark_write_native_tcp(spark):
     """End-to-end executor path: a 3-partition DataFrame streams columnar
     blocks into the fake server over per-partition connections."""
-    from chainhouse_spark.sinks.native_tcp import write_native_tcp
-
     srv = FakeServer()
     df = (
         spark.range(0, 97)
@@ -357,12 +250,58 @@ def test_spark_write_native_tcp(spark):
     srv.close()
     assert srv.errors == []
     got = sorted(
-        n for _, data in srv.received_blocks for n in data[0]
+        n for _, _, data in srv.received_blocks for n in data[0]
     )  # column 0 = number
     assert got == list(range(97))
     # every INSERT named the columns explicitly against ethereum.blocks
     inserts = [q for q in srv.queries if q.startswith("INSERT")]
     assert all("ethereum.blocks (`number`, `miner`, `flags`, `ok`)" in q for q in inserts)
+
+
+class _LocalFrame:
+    """DataFrame stand-in whose one partition runs in this process, so a
+    connection the sink leaves open stays open while the test holds the
+    raised exception (and with it the partition's frames)."""
+
+    def __init__(self, schema, rows):
+        self.schema = schema
+        self.rows = rows
+        self.partitions_run = 0
+
+    def foreachPartition(self, f):
+        self.partitions_run += 1
+        f(iter(self.rows))
+
+
+@pytest.mark.parametrize(
+    "endpoint", ["http://h:8123", "h:", "h:x", ":9000", "h:65536", "h:9000/db"]
+)
+def test_write_native_tcp_rejects_malformed_endpoint_on_driver(endpoint):
+    df = _LocalFrame(SCHEMA, _rows((1, "a", [1], True)))
+    with pytest.raises(ValueError, match=f"endpoint {endpoint!r}"):
+        write_native_tcp(df, "blocks", endpoint)
+    assert df.partitions_run == 0
+
+
+def test_parse_endpoint_defaults_to_native_port():
+    assert parse_endpoint("127.0.0.1") == ("127.0.0.1", 9000)
+    assert parse_endpoint("ch.local:19000") == ("ch.local", 19000)
+
+
+def test_write_native_tcp_closes_connection_when_insert_fails():
+    srv = FakeServer(fail_queries=True)
+    df = _LocalFrame(SCHEMA, _rows((1, "a", [1], True), (2, None, [], False)))
+    try:
+        with pytest.raises(ClickHouseError) as err:
+            write_native_tcp(df, "blocks", f"127.0.0.1:{srv.port}")
+        assert "Table does not exist" in str(err.value)
+        # `err` keeps the failed partition's frames alive, so a connection
+        # left to garbage collection would still be open here.
+        assert len(srv.connections) == 1
+        assert all(eof.wait(10) for eof in srv.connections)
+    finally:
+        srv.close()
+    assert srv.errors == []
 
 
 @pytest.mark.skipif(
@@ -371,8 +310,7 @@ def test_spark_write_native_tcp(spark):
 )
 def test_live_server_smoke():
     endpoint = os.environ["CHAINHOUSE_CLICKHOUSE_TCP"]
-    host, _, port = endpoint.partition(":")
-    client = NativeTCPClient(host, int(port or 9000))
+    client = NativeTCPClient(*parse_endpoint(endpoint))
     try:
         assert client.execute("SELECT 1") == [[1]]
     finally:

@@ -195,10 +195,11 @@ def test_lsh_bucket_cap_bounds_adversarial_expansion(spark):
         max_size=8,
     )
 )
-def test_rowbinary_encode_decode_roundtrip_property(rows):
+def test_native_block_encode_decode_roundtrip_property(rows):
     """For ANY values (full u256 range, NULLs, empty arrays, unicode
-    strings): encode -> independent decode == identity. No Spark needed —
+    strings): encode_block -> read_block == identity. No Spark needed —
     the encoder is pure."""
+    import io
     from decimal import Decimal
 
     from pyspark.sql import Row
@@ -207,8 +208,7 @@ def test_rowbinary_encode_decode_roundtrip_property(rows):
         StringType, StructField, StructType,
     )
 
-    from chainhouse_spark.sinks.rowbinary import row_encoder
-    from tests.test_sources_sinks import _rb_decode
+    from chainhouse_spark.sinks.native_tcp import encode_block, read_block
 
     schema = StructType([
         StructField("number", LongType(), False),
@@ -223,17 +223,18 @@ def test_rowbinary_encode_decode_roundtrip_property(rows):
             removed=r, note=note, topics=t)
         for n, h, v, r, note, t in rows
     ]
-    enc = row_encoder(schema, ["hash"])
-    buf = b"".join(enc(r) for r in data)
-    back = _rb_decode(buf, schema, ["hash"])
-    assert len(back) == len(data)
-    for orig, dec in zip(data, back):
-        assert dec["number"] == orig.number
-        assert dec["hash"] == orig.hash
-        assert dec["value"] == orig.value
-        assert dec["removed"] == orig.removed
-        assert dec["note"] == orig.note
-        assert dec["topics"] == list(orig.topics)
+    block = encode_block(schema, data, order_by=["hash"])
+    cols, back = read_block(io.BytesIO(block))
+    assert [c for c, _ in cols] == schema.fieldNames()
+    number, hash_, value, removed, note, topics = back
+    assert len(number) == len(data)
+    for i, orig in enumerate(data):
+        assert number[i] == orig.number
+        assert hash_[i] == orig.hash
+        assert (None if value[i] is None else Decimal(value[i])) == orig.value
+        assert removed[i] == orig.removed
+        assert (None if note[i] is None else note[i].decode()) == orig.note
+        assert topics[i] == list(orig.topics)
 
 
 def test_lsh_star_cap_preserves_near_dup_clusters(spark):

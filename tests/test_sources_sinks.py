@@ -7,7 +7,6 @@ from __future__ import annotations
 import hashlib
 import json
 import threading
-import urllib.parse
 import uuid
 from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -352,6 +351,20 @@ def test_cli_surface(capsys):
     assert out.count("CREATE TABLE") == 4
 
 
+@pytest.mark.parametrize(
+    "flag, value",
+    [("--batch", "0"), ("--batch", "-3"), ("--parallelism", "0"), ("--parallelism", "-1")],
+)
+def test_cli_rejects_non_positive_batch_and_parallelism(flag, value):
+    """A batch below 1 would slice the range forever and a parallelism
+    below 1 would reach repartition(0); both stop at parse time."""
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(
+            ["--ethereum", "http://node:8545", "--from", "1", "--to", "6",
+             "--output", "warehouse", flag, value]
+        )
+
+
 def test_jsonl_source_quarantines_corrupt_lines(spark, tmp_path):
     """Schema-enforced JSONL: clean rows parse, malformed lines are captured
     whole in _corrupt_record instead of failing the job."""
@@ -481,236 +494,6 @@ def test_xml_roundtrip_flat_projection(spark, tmp_path):
     assert a == c
 
 
-def test_jdbc_write_path_roundtrip_derby(spark, tmp_path):
-    """Execute the actual JDBC write path (K5/K6) — not just DDL strings —
-    against Spark's bundled embedded Derby: all four chain tables write
-    through write_jdbc and read back value-identical (arrays as JSON,
-    u256 decimals as digit strings, binary as-is — the jdbc_projection
-    wire contract)."""
-    from chainhouse_spark.queries.ethereum import _tables
-    from chainhouse_spark.sinks.clickhouse import jdbc_projection, write_jdbc
-    from tests.compare import canon_rows
-
-    url = f"jdbc:derby:{tmp_path}/chaindb;create=true"
-    tables = _tables(spark)
-    for name, df in tables.items():
-        write_jdbc(
-            df,
-            name,
-            endpoint="unused",
-            url=url,
-            driver="org.apache.derby.jdbc.EmbeddedDriver",
-        )
-        back = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option("dbtable", name)
-            .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-            .load()
-        )
-        expect = jdbc_projection(df).toPandas()
-        got = back.toPandas()
-        assert len(got) == len(expect) and len(got) > 0 or name == "withdraws"
-        assert sorted(c.lower() for c in got.columns) == sorted(
-            c.lower() for c in expect.columns
-        )
-        got.columns = [c.lower() for c in got.columns]
-        expect.columns = [c.lower() for c in expect.columns]
-        assert canon_rows(got) == canon_rows(expect), name
-
-    # Idempotent re-ingest contract (K8): append twice, dedup keys collapse
-    # duplicates exactly like ReplacingMergeTree FINAL would.
-    from chainhouse_spark.schemas import DEDUP_KEYS
-
-    write_jdbc(
-        tables["blocks"],
-        "blocks",
-        endpoint="unused",
-        url=url,
-        driver="org.apache.derby.jdbc.EmbeddedDriver",
-    )
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "blocks")
-        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        .load()
-    )
-    n_blocks = tables["blocks"].count()
-    assert back.count() == 2 * n_blocks
-    assert back.dropDuplicates(
-        [c for c in back.columns if c.lower() in ("hash", "number")]
-    ).count() == n_blocks
-
-
-# ---------------------------------------------------------------------------
-# RowBinary native-format insert path (sinks/rowbinary.py)
-# ---------------------------------------------------------------------------
-
-
-def test_rowbinary_byte_golden():
-    """Exact wire bytes for a crafted row, assembled independently with
-    struct.pack so an encoder bug can't cancel out."""
-    import struct
-
-    from pyspark.sql import Row
-    from pyspark.sql.types import (
-        ArrayType, BinaryType, BooleanType, DecimalType, LongType,
-        StringType, StructField, StructType,
-    )
-    from decimal import Decimal
-
-    from chainhouse_spark.sinks.rowbinary import row_encoder
-
-    schema = StructType([
-        StructField("number", LongType(), False),
-        StructField("hash", BinaryType(), False),        # FixedString(32)
-        StructField("value", DecimalType(38, 0), True),  # Nullable(UInt256)
-        StructField("removed", BooleanType(), False),
-        StructField("note", StringType(), True),         # Nullable(String)
-        StructField("topics", ArrayType(BinaryType()), True),  # Array(FS32)
-    ])
-    h = bytes(range(32))
-    t0, t1 = bytes(range(32, 64)), bytes(range(64, 96))
-    row = Row(number=7, hash=h, value=Decimal(2**200 + 5), removed=True,
-              note=None, topics=[t0, t1])
-    got = row_encoder(schema, ["hash"])(row)
-
-    expect = struct.pack("<Q", 7)                     # UInt64 LE
-    expect += h                                       # FixedString(32)
-    expect += b"\x00" + (2**200 + 5).to_bytes(32, "little")  # Nullable u256
-    expect += b"\x01"                                 # Boolean true
-    expect += b"\x01"                                 # note NULL
-    expect += b"\x02" + t0 + t1                       # Array: varint(2) + items
-    assert got == expect
-
-
-def test_rowbinary_varint_boundaries():
-    from chainhouse_spark.sinks.rowbinary import varint
-
-    assert varint(0) == b"\x00"
-    assert varint(127) == b"\x7f"
-    assert varint(128) == b"\x80\x01"
-    assert varint(300) == b"\xac\x02"
-    assert varint(1 << 21) == b"\x80\x80\x80\x01"
-
-
-def _rb_decode(buf, schema, order_by):
-    """Independent minimal RowBinary decoder (test-side only)."""
-    from decimal import Decimal
-
-    from pyspark.sql.types import (
-        ArrayType, BinaryType, BooleanType, DecimalType, LongType, StringType,
-    )
-
-    from chainhouse_spark.sinks.clickhouse import FIXED_WIDTHS
-
-    pos = 0
-
-    def rd(n):
-        nonlocal pos
-        out = buf[pos:pos + n]
-        assert len(out) == n
-        pos += n
-        return out
-
-    def rvarint():
-        nonlocal pos
-        shift = v = 0
-        while True:
-            b = buf[pos]; pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return v
-            shift += 7
-
-    def rval(name, dtype):
-        if isinstance(dtype, BinaryType):
-            if name in FIXED_WIDTHS:
-                return rd(FIXED_WIDTHS[name])
-            return rd(rvarint())
-        if isinstance(dtype, DecimalType):
-            return Decimal(int.from_bytes(rd(32), "little"))
-        if isinstance(dtype, LongType):
-            return int.from_bytes(rd(8), "little")
-        if isinstance(dtype, BooleanType):
-            return rd(1) != b"\x00"
-        if isinstance(dtype, StringType):
-            return rd(rvarint()).decode()
-        if isinstance(dtype, ArrayType):
-            return [rval(name, dtype.elementType) for _ in range(rvarint())]
-        raise AssertionError(f"decoder gap: {dtype}")
-
-    rows = []
-    while pos < len(buf):
-        rec = {}
-        for f in schema.fields:
-            nullable = (f.nullable and f.name not in order_by
-                        and not isinstance(f.dataType, ArrayType))
-            if nullable:
-                if rd(1) == b"\x01":
-                    rec[f.name] = None
-                    continue
-            rec[f.name] = rval(f.name, f.dataType)
-        rows.append(rec)
-    assert pos == len(buf)
-    return rows
-
-
-def test_rowbinary_roundtrip_all_four_tables(spark):
-    """Encode every row of the fixture pipeline's four tables; an
-    independent decoder must reproduce the rows exactly (u256 decimals,
-    fixed widths, arrays, era-dependent NULLs)."""
-    from decimal import Decimal
-
-    from chainhouse_spark.queries.ethereum import _tables
-    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
-    from chainhouse_spark.sinks.rowbinary import encode_rows
-
-    tables = _tables(spark)
-    checked = 0
-    for name, df in tables.items():
-        rows = df.collect()
-        buf = encode_rows(rows, name)
-        back = _rb_decode(buf, TABLES[name], DEDUP_KEYS[name])
-        assert len(back) == len(rows)
-        for orig, dec in zip((r.asDict() for r in rows), back):
-            for k, v in orig.items():
-                got = dec[k]
-                if isinstance(v, (bytes, bytearray)):
-                    assert bytes(v) == got, (name, k)
-                elif isinstance(v, list) and v and isinstance(v[0], (bytes, bytearray)):
-                    assert [bytes(x) for x in v] == got, (name, k)
-                elif v is None and isinstance(got, list):
-                    assert got == []  # Array NULL -> [] on the wire
-                else:
-                    assert v == got or (isinstance(v, Decimal) and Decimal(got) == v), (
-                        name, k, v, got)
-                checked += 1
-    assert checked > 1000
-
-
-@contextmanager
-def _fake_clickhouse():
-    """A ClickHouse HTTP endpoint that records each POST as (decoded query
-    string, body)."""
-    received = []
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers["Content-Length"])
-            received.append((urllib.parse.unquote(
-                urllib.parse.urlparse(self.path).query), self.rfile.read(n)))
-            self.send_response(200)
-            self.end_headers()
-
-        def log_message(self, *a):
-            pass
-
-    with _serving(Handler) as port:
-        yield f"127.0.0.1:{port}", received
-
-
 @contextmanager
 def _fake_rpc_node():
     """A JSON-RPC node answering from `fake_transport`."""
@@ -746,50 +529,61 @@ def _serving(handler):
         srv.server_close()
 
 
-def test_rowbinary_http_insert_path(spark):
-    """Drive write_rowbinary_http against a fake ClickHouse HTTP endpoint:
-    the INSERT query must name the table + every column + FORMAT RowBinary,
-    and the POsted bytes must decode to the dataframe's rows."""
-    from chainhouse_spark.queries.ethereum import _tables
-    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
-    from chainhouse_spark.sinks.rowbinary import write_rowbinary_http
-
-    with _fake_clickhouse() as (endpoint, received):
-        blocks = _tables(spark)["blocks"]
-        write_rowbinary_http(blocks, "blocks", endpoint, batch_size=3)
-        assert received, "no INSERT arrived"
-        q0 = received[0][0]
-        assert q0.startswith("query=INSERT INTO ethereum.blocks (`hash`, `number`")
-        assert q0.endswith("FORMAT RowBinary")
-        all_bytes = b"".join(body for _, body in received)
-        back = _rb_decode(all_bytes, TABLES["blocks"], DEDUP_KEYS["blocks"])
-        assert len(back) == blocks.count()
-        nums = sorted(r["number"] for r in back)
-        assert nums == sorted(r.number for r in blocks.collect())
-
-
-def test_cli_rpc_to_clickhouse_rowbinary(spark, capsys):
-    """The CLI's RPC -> ClickHouse path: two 3-block slices fetched from a
-    JSON-RPC node, all four tables INSERTed over RowBinary HTTP."""
+def test_cli_rpc_to_clickhouse(spark, capsys):
+    """The CLI's RPC -> ClickHouse path: the five provisioning statements
+    go over native TCP first, then two 3-block slices fetched from a
+    JSON-RPC node load all four tables as columnar blocks."""
     from chainhouse_spark.cli import main
-    from chainhouse_spark.schemas import DEDUP_KEYS, TABLES
+    from tests.fake_clickhouse import FakeServer
 
-    with _fake_rpc_node() as node, _fake_clickhouse() as (ch_endpoint, received):
-        rc = main([
-            "--ethereum", node, "--clickhouse", ch_endpoint,
-            "--ch-protocol", "rowbinary",
-            "--from", "1", "--to", "6", "--batch", "3", "--parallelism", "3",
-        ])
+    srv = FakeServer()
+    try:
+        with _fake_rpc_node() as node:
+            rc = main([
+                "--ethereum", node, "--clickhouse", f"127.0.0.1:{srv.port}",
+                "--from", "1", "--to", "6", "--batch", "3", "--parallelism", "3",
+            ])
+    finally:
+        srv.close()
     assert rc == 0
     assert "wrote blocks [4, 6]" in capsys.readouterr().out
-    bodies = {}
-    for query, body in received:
+    _assert_provisioned_then_loaded(srv)
+
+
+def test_cli_rpc_to_clickhouse_in_fresh_process():
+    """The same load from the command line: the CLI starts (and stops) its
+    own Spark session when none is running."""
+    import subprocess
+    import sys
+
+    from tests.fake_clickhouse import FakeServer
+
+    srv = FakeServer()
+    try:
+        with _fake_rpc_node() as node:
+            proc = subprocess.run(
+                [sys.executable, "-m", "chainhouse_spark.cli",
+                 "--ethereum", node, "--clickhouse", f"127.0.0.1:{srv.port}",
+                 "--from", "1", "--to", "6", "--batch", "3"],
+                capture_output=True, text=True, timeout=300,
+            )
+    finally:
+        srv.close()
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "wrote blocks [4, 6]" in proc.stdout
+    _assert_provisioned_then_loaded(srv)
+
+
+def _assert_provisioned_then_loaded(srv) -> None:
+    """The five provisioning statements came before any INSERT, and the
+    fixture node's six blocks landed in all four tables."""
+    assert srv.errors == []
+    assert srv.queries[:5] == ch.all_ddl()
+    assert all(q.startswith("INSERT INTO ethereum.") for q in srv.queries[5:])
+    counts: dict[str, int] = {}
+    for query, _, data in srv.received_blocks:
         table = query.split("INSERT INTO ethereum.", 1)[1].split(" ", 1)[0]
-        bodies[table] = bodies.get(table, b"") + body
-    counts = {
-        name: len(_rb_decode(body, TABLES[name], DEDUP_KEYS[name]))
-        for name, body in bodies.items()
-    }
+        counts[table] = counts.get(table, 0) + len(data[0])
     assert counts == {"blocks": 6, "transactions": 6, "events": 6, "withdraws": 3}
 
 
